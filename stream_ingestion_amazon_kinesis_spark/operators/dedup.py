@@ -916,7 +916,6 @@ def exact_passage_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 from ..plans.registry import QUERIES as _QUERIES  # noqa: E402
-from pyspark.sql.window import Window as _W  # noqa: E402
 
 
 @register(

@@ -42,31 +42,31 @@ SESSION_SCHEMA = T.StructType(
 )
 
 CORRUPT_COL = "_corrupt_record"
+# The session schema plus the column a PERMISSIVE parse fills with the
+# raw text of a record it could not parse — every session decode path
+# (batch, JSON file stream, kinesis_sim stream) parses with these two.
+SESSION_SCHEMA_WITH_CORRUPT = T.StructType(
+    list(SESSION_SCHEMA.fields) + [T.StructField(CORRUPT_COL, T.StringType())]
+)
+PERMISSIVE = {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": CORRUPT_COL}
 
 
 def parse_json_records(
-    raw: DataFrame,
-    schema: T.StructType = SESSION_SCHEMA,
-    value_col: str = "value",
+    raw: DataFrame, value_col: str = "value"
 ) -> tuple[DataFrame, DataFrame]:
     """bytes/str JSON column -> (parsed, quarantine).
 
     `raw` carries one JSON document per row in `value_col` (BinaryType or
     StringType — the Kinesis/Kafka wire shape). Returns the parsed rows
-    with the declared schema, and the quarantine rows (unparseable JSON)
+    with the session schema, and the quarantine rows (unparseable JSON)
     carrying the original payload — the engine's version of the
     reference's drop-with-log path (consumer.py:178-185).
     """
     value = F.col(value_col)
     if dict(raw.dtypes)[value_col] == "binary":
         value = value.cast("string")
-
-    schema_with_corrupt = T.StructType(
-        list(schema.fields) + [T.StructField(CORRUPT_COL, T.StringType())]
-    )
     parsed_raw = raw.withColumn(
-        "_parsed",
-        F.from_json(value, schema_with_corrupt, {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": CORRUPT_COL}),
+        "_parsed", F.from_json(value, SESSION_SCHEMA_WITH_CORRUPT, PERMISSIVE)
     )
     # from_json yields NULL struct for totally unparseable input and sets
     # _corrupt_record when it salvages nothing; treat both as quarantine.

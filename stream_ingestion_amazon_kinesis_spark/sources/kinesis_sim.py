@@ -279,93 +279,120 @@ def _consume_killpoint(stream_dir: str, name: str) -> None:
     os.kill(os.getpid(), signal.SIGKILL)
 
 
+def _remove_staged(tmp_paths) -> None:
+    for tmp in tmp_paths:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+
+
 @dataclass
 class ShardWriteCommit(WriterCommitMessage):
-    files: list  # (final_relpath, tmp_path) pairs
+    files: list  # (stream, final_relpath, tmp_path) triples
+
+
+# Writer routing columns. A frame that also carries a `stream` column
+# names each row's destination stream (the put_record StreamName);
+# without one every row goes to the `path` stream.
+KEY_COL, DATA_COL, STREAM_COL = "partition_key", "data", "stream"
 
 
 class KinesisSimWriter(DataSourceWriter):
     """put_record twin: route rows to shards by partition key, write
     per-task part files to a staging area, publish on driver commit —
     Spark's two-phase commit standing in for the service-side append.
+    One write job can feed several streams (the `stream` column), and
+    commit() publishes each of them under the same protocol.
     """
 
     def __init__(
         self,
         path: str,
         num_shards: int,
-        key_col: str,
-        data_col: str,
         commit_token: str | None = None,
+        has_stream_col: bool = False,
     ):
         self.path = path
         self.num_shards = num_shards
-        self.key_col = key_col
-        self.data_col = data_col
         # Idempotence token for epoch retries (option commitToken, set by
         # the streaming sink to <checkpoint-scope>e<epoch>): commit()
         # embeds it in published file names, rolls back a torn previous
         # attempt of the SAME token before publishing, and records a
-        # done-marker after — so a retried epoch converges to exactly one
-        # copy no matter where the previous attempt died. None (plain
-        # batch writes) keeps the plain append behavior.
+        # per-stream done-marker after — so a retried epoch converges to
+        # exactly one copy in every stream no matter where the previous
+        # attempt died. None (plain batch writes) keeps the plain append
+        # behavior.
         self.commit_token = commit_token
+        self.has_stream_col = has_stream_col
 
     def write(self, iterator) -> ShardWriteCommit:
         task_id = uuid.uuid4().hex[:12]
         handles, files = {}, []
-        staging = os.path.join(self.path, "_staging")
-        os.makedirs(staging, exist_ok=True)
         try:
             for row in iterator:
-                key = str(row[self.key_col])
+                stream = row[STREAM_COL] if self.has_stream_col else self.path
+                key = str(row[KEY_COL])
                 # crc32: deterministic cross-process (Python's hash() is
                 # salted), the MD5-of-partition-key role in Kinesis.
                 shard = zlib.crc32(key.encode("utf-8")) % self.num_shards
-                if shard not in handles:
+                if (stream, shard) not in handles:
+                    staging = os.path.join(stream, "_staging")
+                    os.makedirs(staging, exist_ok=True)
                     rel = os.path.join(
                         f"shard-{shard:05d}", f"part-{task_id}.jsonl"
                     )
                     tmp = os.path.join(staging, f"{shard:05d}-{task_id}.jsonl")
-                    handles[shard] = open(tmp, "w", encoding="utf-8")
-                    files.append((rel, tmp))
-                env = {"partitionKey": key, "data": row[self.data_col]}
-                handles[shard].write(json.dumps(env) + "\n")
+                    handles[stream, shard] = open(tmp, "w", encoding="utf-8")
+                    files.append((stream, rel, tmp))
+                env = {"partitionKey": key, "data": row[DATA_COL]}
+                handles[stream, shard].write(json.dumps(env) + "\n")
         finally:
             for fh in handles.values():
                 fh.close()
         return ShardWriteCommit(files=files)
 
     def commit(self, messages) -> None:
+        by_stream: dict[str, list] = {}
+        for msg in messages:
+            if msg is None:
+                continue
+            for stream, rel, tmp in msg.files:
+                by_stream.setdefault(stream, []).append((rel, tmp))
+        # The `path` stream commits first, so the drill points armed in it
+        # fire before any other stream of the job is published.
+        for stream in sorted(by_stream, key=lambda s: (s != self.path, s)):
+            self._commit_stream(stream, by_stream[stream])
+
+    def _commit_stream(self, stream: str, files: list) -> None:
         # Crash-injection failpoint for the exactly-once tests: a file
         # named _failpoint_before_commit in the stream dir makes this
         # commit die AFTER task files landed in staging but BEFORE any
-        # is published — the torn-write moment. Single-shot (the file is
-        # consumed) and file-based because commit runs in a separate
-        # Python worker process where a test's monkeypatch/env can't
-        # reach. No-op in normal operation.
-        failpoint = os.path.join(self.path, "_failpoint_before_commit")
+        # of the stream's files is published — the torn-write moment.
+        # Single-shot (the file is consumed) and file-based because
+        # commit runs in a separate Python worker process where a test's
+        # monkeypatch/env can't reach. No-op in normal operation.
+        failpoint = os.path.join(stream, "_failpoint_before_commit")
         if os.path.exists(failpoint):
             os.remove(failpoint)
             raise RuntimeError(
                 "kinesis_sim failpoint: injected crash before commit"
             )
-        # kill -9 drill points (round-7 chaos tests): staged, nothing
-        # published yet / torn mid-publish. See _consume_killpoint.
-        _consume_killpoint(self.path, "_killpoint_before_publish")
+        # kill -9 drill points: staged, nothing published yet / torn
+        # mid-publish / this stream done, the next not started. See
+        # _consume_killpoint.
+        _consume_killpoint(stream, "_killpoint_before_publish")
         kill_mid_publish = os.path.exists(
-            os.path.join(self.path, "_killpoint_mid_publish")
+            os.path.join(stream, "_killpoint_mid_publish")
         )
         token = self.commit_token
         done_marker = (
-            os.path.join(self.path, "_epochs", f"w-{token}") if token else None
+            os.path.join(stream, "_epochs", f"w-{token}") if token else None
         )
         if done_marker and os.path.exists(done_marker):
-            # This exact (checkpoint-scope, epoch) already published in a
-            # previous attempt that died between writer commit and the
-            # sink's own marker: drop the retry's staged files, publish
+            # This exact (checkpoint-scope, epoch) already published to
+            # this stream in a previous attempt that died before the
+            # epoch committed: drop the retry's staged files, publish
             # nothing — the stream already holds exactly one copy.
-            self.abort(messages)
+            _remove_staged(tmp for _rel, tmp in files)
             return
         if token:
             # Roll back a TORN previous attempt of this same token: any
@@ -373,11 +400,10 @@ class KinesisSimWriter(DataSourceWriter):
             # (it was appended by the dead attempt and the epoch never
             # committed), so deleting it restores the pre-epoch state and
             # the republish below lands at the same sequence numbers.
-            if os.path.isdir(self.path):
-                for d in _shard_dirs(self.path):
-                    for f in _shard_files(d):
-                        if f"-{token}-" in os.path.basename(f):
-                            os.remove(f)
+            for d in _shard_dirs(stream):
+                for f in _shard_files(d):
+                    if f"-{token}-" in os.path.basename(f):
+                        os.remove(f)
         # Sequence numbers are defined by FILE-NAME order within a shard
         # (_iter_shard_records), so appended files MUST sort after every
         # existing file or a later append would renumber records a
@@ -398,49 +424,44 @@ class KinesisSimWriter(DataSourceWriter):
         # order (the order consumers have been reading), which preserves
         # all record positions and guarantees appends sort after.
         next_idx: dict[str, int] = {}
-        for msg in messages:
-            if msg is None:
-                continue
-            for rel, tmp in msg.files:
-                shard_rel = os.path.dirname(rel)
-                shard_dir = os.path.join(self.path, shard_rel)
-                os.makedirs(shard_dir, exist_ok=True)
-                if shard_rel not in next_idx:
+        for rel, tmp in files:
+            shard_rel = os.path.dirname(rel)
+            shard_dir = os.path.join(stream, shard_rel)
+            os.makedirs(shard_dir, exist_ok=True)
+            if shard_rel not in next_idx:
+                existing = _shard_files(shard_dir)
+                if any(not _INDEXED_RE.match(os.path.basename(f)) for f in existing):
+                    for i, f in enumerate(existing):
+                        tail = os.path.basename(f)[len("part-"):]
+                        canon = os.path.join(shard_dir, f"part-{i:08d}-{tail}")
+                        if f != canon:
+                            os.replace(f, canon)
                     existing = _shard_files(shard_dir)
-                    if any(not _INDEXED_RE.match(os.path.basename(f)) for f in existing):
-                        for i, f in enumerate(existing):
-                            tail = os.path.basename(f)[len("part-"):]
-                            canon = os.path.join(shard_dir, f"part-{i:08d}-{tail}")
-                            if f != canon:
-                                os.replace(f, canon)
-                        existing = _shard_files(shard_dir)
-                    next_idx[shard_rel] = len(existing)
-                idx = next_idx[shard_rel]
-                next_idx[shard_rel] = idx + 1
-                suffix = os.path.basename(rel)[len("part-"):]
-                if token:
-                    suffix = f"{token}-{suffix}"
-                fname = f"part-{idx:08d}-{suffix}"
-                os.replace(tmp, os.path.join(shard_dir, fname))
-                if kill_mid_publish:
-                    # consume + SIGKILL after the FIRST publish: a
-                    # genuinely torn multi-file publish for the drill.
-                    _consume_killpoint(self.path, "_killpoint_mid_publish")
+                next_idx[shard_rel] = len(existing)
+            idx = next_idx[shard_rel]
+            next_idx[shard_rel] = idx + 1
+            suffix = os.path.basename(rel)[len("part-"):]
+            if token:
+                suffix = f"{token}-{suffix}"
+            fname = f"part-{idx:08d}-{suffix}"
+            os.replace(tmp, os.path.join(shard_dir, fname))
+            if kill_mid_publish:
+                # consume + SIGKILL after the FIRST publish: a
+                # genuinely torn multi-file publish for the drill.
+                _consume_killpoint(stream, "_killpoint_mid_publish")
         if done_marker:
             os.makedirs(os.path.dirname(done_marker), exist_ok=True)
             with open(done_marker, "w", encoding="utf-8") as fh:
                 fh.write("ok")
-        staging = os.path.join(self.path, "_staging")
+        staging = os.path.join(stream, "_staging")
         if os.path.isdir(staging) and not os.listdir(staging):
             os.rmdir(staging)
+        _consume_killpoint(stream, "_killpoint_between_routes")
 
     def abort(self, messages) -> None:
-        for msg in messages:
-            if msg is None:
-                continue
-            for _rel, tmp in msg.files:
-                if os.path.exists(tmp):
-                    os.remove(tmp)
+        _remove_staged(
+            tmp for msg in messages if msg is not None for *_, tmp in msg.files
+        )
 
 
 class KinesisSimDataSource(DataSource):
@@ -452,8 +473,12 @@ class KinesisSimDataSource(DataSource):
       maxFetchRecordsPerShard  per-shard per-batch cap, default 200
                                (consumer.py:115's Limit=200)       [stream read]
       numShards                shard count on write, default 4
-      partitionKeyColumn       routing column on write, default partition_key
-      dataColumn               payload column on write, default data
+      commitToken              epoch identity on write; makes a retried
+                               write publish each stream exactly once
+
+    A written frame carries `partition_key` (shard routing) and `data`
+    (payload) columns, plus an optional `stream` column naming each
+    row's destination stream directory; rows go to `path` without it.
     """
 
     @classmethod
@@ -488,9 +513,8 @@ class KinesisSimDataSource(DataSource):
         return KinesisSimWriter(
             path,
             int(self.options.get("numShards", "4")),
-            self.options.get("partitionKeyColumn", "partition_key"),
-            self.options.get("dataColumn", "data"),
             self.options.get("committoken") or self.options.get("commitToken"),
+            STREAM_COL in schema.fieldNames(),
         )
 
 

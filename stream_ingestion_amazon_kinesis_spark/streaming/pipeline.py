@@ -1,30 +1,32 @@
 """Structured Streaming pipelines — the reference's runtime identity.
 
 The reference is a hand-rolled poll loop: enumerate shards, get_records
-per shard forever, transform each record in Python, put_record to one
-of two destination streams, with in-memory cursors that vanish on
-restart (consumer.py:53-94, 108-195 — at-least-once with full
-TRIM_HORIZON replay). This module is the same pipeline as ONE logical
-plan, incrementalized by the micro-batch engine:
+per shard forever, transform each record in Python, put_record it to
+one of two destination streams, log and drop malformed records, with
+in-memory cursors that vanish on restart (consumer.py:53-94, 108-195 —
+at-least-once with full TRIM_HORIZON replay). This module is the same
+pipeline as ONE logical plan, incrementalized by the micro-batch engine:
 
-- source: `readStream` over a directory of JSON records (the test/
-  local stand-in; a Kinesis/Kafka source is a `format()` swap — the
-  plan and sinks are untouched, per BASELINE.json's "Structured
-  Streaming + Kinesis source" approach).
-- transform: the exact T1-T6 enrichment from operators/enrichment.py —
+- source: a kinesis_sim stream (`read_session_stream_kinesis_sim`) or a
+  directory of JSON records (`read_session_stream`), both parsed
+  PERMISSIVE so a malformed record keeps its raw text in
+  `_corrupt_record`.
+- transform: the exact T1-T5 enrichment from operators/enrichment.py —
   same code object as the batch path, which is what makes streaming
   results oracle-checkable by batch replay.
-- sink: `foreachBatch` demux that writes BOTH routed outputs and the
-  quarantine from one cached micro-batch (one source scan per trigger —
-  the reference re-serializes record-at-a-time, consumer.py:160-171).
-- state: checkpointed offsets give exactly-once file output, replacing
-  the reference's restart-equals-replay behavior (consumer.py:76).
+- sink: `kinesis_sim_sink`, a `foreachBatch` demux that tags every row
+  with its destination stream — USA, International, or the
+  `_quarantine` stream beside them for malformed records — and writes
+  all of them in ONE kinesis_sim write job per epoch (the reference's
+  per-record put_record(StreamName=...), consumer.py:160-171).
+- exactly-once: the checkpoint's offset WAL replays an unfinished epoch,
+  and the writer's commitToken `<checkpoint-scope>e<epoch>` makes the
+  replay publish each stream exactly once — replacing the reference's
+  restart-equals-replay behavior (consumer.py:76).
 
-Shard -> partition mapping: each source file/shard becomes input
-partitions processed by parallel tasks; `trigger(processingTime=...)`
-replaces the `time.sleep(2)` pacing (consumer.py:194-195); per-key
-output ordering (partition key session_id, consumer.py:170) is
-preserved by repartitioning on session_id before the sink write.
+Shard -> partition mapping: each source shard is read by its own task;
+a record's destination shard is crc32(session_id) % 4, the
+put_record(PartitionKey=session_id) routing (consumer.py:170).
 """
 
 from __future__ import annotations
@@ -37,7 +39,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.enrichment import enrich_sessions
-from ..sources.json_source import CORRUPT_COL, SESSION_SCHEMA
+from ..sources.json_source import (
+    CORRUPT_COL,
+    PERMISSIVE,
+    SESSION_SCHEMA_WITH_CORRUPT,
+)
 
 
 def produce_records(
@@ -64,87 +70,17 @@ def produce_records(
     )
 
 
-def read_session_stream(
-    spark: SparkSession,
-    input_dir: str,
-    schema: T.StructType = SESSION_SCHEMA,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
+def read_session_stream(spark: SparkSession, input_dir: str) -> DataFrame:
     """Streaming source of JSON session records.
 
     File source here; swapping `.format("kinesis")` / `.format("kafka")`
-    with the matching options yields the same downstream plan. The
-    `maxFilesPerTrigger` option is the file-source analog of the
-    reference's `Limit=200` fetch cap (consumer.py:114-116).
+    with the matching options yields the same downstream plan.
     """
-    schema_with_corrupt = T.StructType(
-        list(schema.fields) + [T.StructField(CORRUPT_COL, T.StringType())]
+    return (
+        spark.readStream.schema(SESSION_SCHEMA_WITH_CORRUPT)
+        .options(**PERMISSIVE)
+        .json(input_dir)
     )
-    reader = (
-        spark.readStream.schema(schema_with_corrupt)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", CORRUPT_COL)
-    )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.json(input_dir)
-
-
-def enrichment_sink(output_dir: str):
-    """foreachBatch body: split one cached micro-batch into the two
-    routed sinks + quarantine (T6 demux, consumer.py:160-165, with
-    exactly-once file commits instead of per-record put_record)."""
-
-    def write_batch(batch: DataFrame, epoch_id: int) -> None:
-        batch.persist()
-        try:
-            ok = batch.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
-            quarantine = batch.filter(F.col(CORRUPT_COL).isNotNull()).select(
-                F.col(CORRUPT_COL).alias("raw_record")
-            )
-            enriched = enrich_sessions(ok)
-            # T7: partition-key locality on session_id before the write —
-            # the file-sink equivalent of put_record(PartitionKey=...).
-            for name, part in (
-                ("usa", enriched.filter(F.col("country") == "USA")),
-                ("international", enriched.filter(F.col("country") != "USA")),
-            ):
-                (
-                    part.repartition(F.col("session_id"))
-                    .write.mode("append")
-                    .json(os.path.join(output_dir, name))
-                )
-            quarantine.write.mode("append").json(os.path.join(output_dir, "errors"))
-        finally:
-            batch.unpersist()
-
-    return write_batch
-
-
-def run_enrichment_pipeline(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    trigger_seconds: int = 2,
-    await_all_available: bool = False,
-):
-    """The flagship pipeline end-to-end (consumer.py main loop as one
-    streaming query). Returns the started StreamingQuery.
-
-    `trigger_seconds` mirrors the reference's sleep(2) sweep pacing;
-    `checkpoint_dir` is what upgrades at-least-once/replay-everything
-    (consumer.py:76) to exactly-once."""
-    stream = read_session_stream(spark, input_dir)
-    query = (
-        stream.writeStream.foreachBatch(enrichment_sink(output_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
-    )
-    if await_all_available:
-        query.processAllAvailable()
-    return query
 
 
 # ---------------------------------------------------------------------------
@@ -253,86 +189,73 @@ def run_to_memory_sink(df: DataFrame, name: str, output_mode: str = "append"):
     return query
 
 
-def kinesis_sim_sink(
-    dest_streams: dict[str, str],
-    num_shards: int = 4,
-    run_scope: str = "default",
-):
-    """foreachBatch body writing each routed split to a kinesis_sim
-    DESTINATION STREAM — the reference's dest_streams demux
-    (consumer.py:160-171: country == 'USA' -> USA stream, else
-    International, PartitionKey=session_id) executed through the custom
-    DataSource's two-phase writer instead of per-record put_record.
-    `dest_streams` maps route name ('USA'/'International') to a stream
-    directory path."""
+def quarantine_stream(dest_streams: dict[str, str]) -> str:
+    """The stream that receives malformed records: `_quarantine` in the
+    directory that holds the USA destination stream."""
+    return os.path.join(
+        os.path.dirname(os.path.abspath(dest_streams["USA"])), "_quarantine"
+    )
+
+
+def kinesis_sim_sink(dest_streams: dict[str, str], run_scope: str = "default"):
+    """foreachBatch body: the reference's demux (consumer.py:160-185:
+    put_record(StreamName=dest_streams[route], PartitionKey=session_id),
+    route 'USA' when country == 'USA' and 'International' otherwise,
+    malformed records logged and dropped) as ONE kinesis_sim write job
+    per epoch. Every row carries its destination stream; a malformed
+    record goes to `quarantine_stream(dest_streams)` with its raw text
+    as both partition key and payload, instead of being dropped.
+    `dest_streams` maps 'USA'/'International' to stream directories;
+    every destination has the writer's default 4 shards.
+
+    Epoch retries are idempotent through the writer's commitToken
+    `<run_scope>e<epoch>`: for each stream, commit() publishes nothing
+    once the stream's done-marker exists, and otherwise rolls back a
+    torn publish of the same token before republishing. The token is
+    scoped to the CHECKPOINT identity (run_scope) because epoch ids
+    restart at 0 under a fresh checkpoint: an unscoped token from an
+    earlier run into the same dest would silently skip the new run's
+    first epoch. The kill -9 drills in tests/test_cli.py crash the
+    driver at every step of this protocol."""
+    usa, intl = dest_streams["USA"], dest_streams["International"]
+    quarantine = quarantine_stream(dest_streams)
 
     def write_batch(batch: DataFrame, epoch_id: int) -> None:
         from ..sources.kinesis_sim import _consume_killpoint, register_format
 
         register_format(batch.sparkSession)
-        # kill -9 drill points (round-7 chaos tests): torn WAL with
-        # nothing / one route / both routes published. Armed by files in
-        # the FIRST route's stream dir; no-ops in normal operation.
-        first_route = next(iter(dest_streams.values()))
-        _consume_killpoint(first_route, "_killpoint_batch_start")
-        batch.persist()
-        try:
-            ok = batch.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
-            enriched = enrich_sessions(ok)
-            # S4 JSON encode inline (json_source.to_json_records semantics):
-            # ISO-8601 timestamps native to to_json.
-            records = enriched.select(
-                F.col("session_id").alias("partition_key"),
-                F.to_json(F.struct(*enriched.columns)).alias("data"),
-                F.col("country"),
+        # kill -9 drill points: torn WAL with nothing / every stream
+        # published. The writer's commit() holds the points in between.
+        # Armed by files in the USA stream dir; no-ops in normal operation.
+        _consume_killpoint(usa, "_killpoint_batch_start")
+        bad = F.col(CORRUPT_COL).isNotNull()
+        enriched = enrich_sessions(batch)
+        # S4 JSON encode inline (json_source.to_json_records semantics):
+        # ISO-8601 timestamps native to to_json. The enrichment collapses
+        # into the ELSE branch of the `data` CASE, so a malformed row's
+        # partly parsed fields never reach T5's cast, which would reject
+        # them under ANSI.
+        payload = F.to_json(
+            F.struct(*[c for c in enriched.columns if c != CORRUPT_COL])
+        )
+        (
+            enriched.select(
+                F.when(bad, F.lit(quarantine))
+                .when(F.col("country") == "USA", F.lit(usa))
+                .otherwise(F.lit(intl))
+                .alias("stream"),
+                F.when(bad, F.col(CORRUPT_COL))
+                .otherwise(F.col("session_id"))
+                .alias("partition_key"),
+                F.when(bad, F.col(CORRUPT_COL)).otherwise(payload).alias("data"),
             )
-            for route, pred in (
-                ("USA", F.col("country") == "USA"),
-                ("International", F.col("country") != "USA"),
-            ):
-                # Epoch-retry idempotence, two layers:
-                # (1) this sink-level marker skips re-RUNNING the write
-                #     job for a route that already committed (restart
-                #     after a crash between the two route writes);
-                # (2) the writer-level commitToken (round 7) makes the
-                #     publish itself idempotent: commit() names published
-                #     files with the token, rolls back a torn previous
-                #     attempt of the same token before republishing, and
-                #     records its own done-marker after the last file —
-                #     closing both residual holes the marker alone left
-                #     open (crash between writer-commit and marker
-                #     creation re-appended the route; kill -9 mid-publish
-                #     re-appended the already-published files). Both are
-                #     exercised by the kill -9 drills in tests/test_cli.py.
-                # Markers and tokens are scoped to the CHECKPOINT identity
-                # (run_scope): epoch ids restart at 0 under a fresh
-                # checkpoint, and an unscoped epoch-0 marker from an
-                # earlier run into the same dest would silently skip the
-                # new run's first epoch.
-                marker = os.path.join(
-                    dest_streams[route],
-                    "_epochs",
-                    f"{run_scope}-{epoch_id:020d}",
-                )
-                if os.path.exists(marker):
-                    continue
-                (
-                    records.filter(pred)
-                    .drop("country")
-                    .write.format("kinesis_sim")
-                    .option("path", dest_streams[route])
-                    .option("numShards", str(num_shards))
-                    .option("commitToken", f"{run_scope}e{epoch_id:020d}")
-                    .mode("append")
-                    .save()
-                )
-                os.makedirs(os.path.dirname(marker), exist_ok=True)
-                with open(marker, "w", encoding="utf-8") as fh:
-                    fh.write("ok")
-                _consume_killpoint(first_route, "_killpoint_between_routes")
-            _consume_killpoint(first_route, "_killpoint_after_routes")
-        finally:
-            batch.unpersist()
+            .write.format("kinesis_sim")
+            .option("path", usa)
+            .option("commitToken", f"{run_scope}e{epoch_id:020d}")
+            .mode("append")
+            .save()
+        )
+        _consume_killpoint(usa, "_killpoint_after_routes")
 
     return write_batch
 
@@ -348,18 +271,11 @@ def read_session_stream_kinesis_sim(
     from ..sources.kinesis_sim import register_format
 
     register_format(spark)
-    schema_with_corrupt = T.StructType(
-        list(SESSION_SCHEMA.fields) + [T.StructField(CORRUPT_COL, T.StringType())]
-    )
     raw = (
         spark.readStream.format("kinesis_sim").option("path", stream_dir).load()
     )
     return raw.select(
-        F.from_json(
-            "data",
-            schema_with_corrupt,
-            {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": CORRUPT_COL},
-        ).alias("r")
+        F.from_json("data", SESSION_SCHEMA_WITH_CORRUPT, PERMISSIVE).alias("r")
     ).select("r.*")
 
 
@@ -372,8 +288,9 @@ def run_kinesis_sim_pipeline(
     source_format: str = "json",
 ):
     """The reference's full topology — source stream -> per-record
-    enrichment -> keyed demux to two destination streams — with the
-    destination side going through the kinesis_sim custom sink.
+    enrichment -> keyed demux to two destination streams plus the
+    quarantine — with the destination side going through the kinesis_sim
+    custom sink.
     `source_format="kinesis_sim"` reads the source from a kinesis_sim
     stream directory instead of a JSON file stream (the CLI pairing
     with `produce`)."""
@@ -388,9 +305,9 @@ def run_kinesis_sim_pipeline(
         stream = read_session_stream_kinesis_sim(spark, input_dir)
     else:
         stream = read_session_stream(spark, input_dir)
-    # Epoch-marker scope = the checkpoint path: one checkpoint == one
-    # monotone epoch-id space, so markers from a different (e.g. fresh)
-    # checkpoint can never suppress this run's writes.
+    # commitToken scope = the checkpoint path: one checkpoint == one
+    # monotone epoch-id space, so done-markers from a different (e.g.
+    # fresh) checkpoint can never suppress this run's writes.
     scope = hashlib.sha256(
         os.path.abspath(checkpoint_dir).encode()
     ).hexdigest()[:12]

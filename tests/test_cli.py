@@ -316,9 +316,9 @@ KILL_POINTS = (
     # writer commit mid-loop: SOME of the route's files published — the
     # torn publish only the commitToken rollback can repair
     "_killpoint_mid_publish",
-    # first route committed + marker, second route never started
+    # first stream committed + marker, the next never started
     "_killpoint_between_routes",
-    # both routes committed, epoch commit log never written (torn WAL)
+    # every stream committed, epoch commit log never written (torn WAL)
     "_killpoint_after_routes",
 )
 
@@ -326,7 +326,8 @@ KILL_POINTS = (
 def test_cli_etl_kill9_chaos_exactly_once(tmp_path):
     """VERDICT r6 ask #3: kill -9 the etl DRIVER at five seeded points
     spanning the whole micro-batch commit protocol, restart, and assert
-    every destination stream holds exactly one copy of every record.
+    every destination stream holds exactly one copy of every record —
+    the malformed one included, in the quarantine stream.
     Unlike the exception failpoint (which unwinds through abort()), a
     SIGKILL leaves genuinely torn state: staged files, half-published
     epochs, offset WAL ahead of the commit log. Runs each drill as a
@@ -344,6 +345,7 @@ def test_cli_etl_kill9_chaos_exactly_once(tmp_path):
         country = "USA" if i % 3 != 2 else "Peru"
         rec = dict(RECORD, session_id=f"s-k{i}", country=country)
         records.append(rec)
+    malformed = '{"session_id": "s-bad", '  # truncated JSON
 
     def make_topo(kp: str):
         base = tmp_path / kp.strip("_")
@@ -351,20 +353,21 @@ def test_cli_etl_kill9_chaos_exactly_once(tmp_path):
             str(base / d) for d in ("stream", "usa", "intl", "ckpt")
         )
         # Source stream written directly in the kinesis_sim layout (no
-        # Spark needed): 2 shards x 3 records.
+        # Spark needed): 2 shards x 3 records, plus the malformed one.
         for shard in (0, 1):
             d = os.path.join(stream, f"shard-{shard:05d}")
             os.makedirs(d)
+            envs = [
+                {"partitionKey": rec["session_id"], "data": json.dumps(rec)}
+                for rec in records[shard * 3 : shard * 3 + 3]
+            ]
+            if shard == 1:
+                envs.append({"partitionKey": "s-bad", "data": malformed})
             with open(
                 os.path.join(d, f"part-{0:08d}-src.jsonl"), "w", encoding="utf-8"
             ) as fh:
-                for rec in records[shard * 3 : shard * 3 + 3]:
-                    fh.write(
-                        json.dumps(
-                            {"partitionKey": rec["session_id"], "data": json.dumps(rec)}
-                        )
-                        + "\n"
-                    )
+                for env_rec in envs:
+                    fh.write(json.dumps(env_rec) + "\n")
         os.makedirs(usa)
         with open(os.path.join(usa, kp), "w", encoding="utf-8") as fh:
             fh.write("arm")
@@ -429,7 +432,7 @@ def test_cli_etl_kill9_chaos_exactly_once(tmp_path):
     for kp, code in restarted.items():
         assert code == 0, f"{kp}: restart exited {code}"
 
-    def stream_sessions(dest: str) -> list[str]:
+    def stream_payloads(dest: str) -> list[str]:
         out = []
         if not os.path.isdir(dest):
             return out
@@ -442,11 +445,11 @@ def test_cli_etl_kill9_chaos_exactly_once(tmp_path):
                 with open(os.path.join(dest, d, f), encoding="utf-8") as fh:
                     for line in fh:
                         if line.strip():
-                            env_rec = json.loads(line)
-                            out.append(
-                                json.loads(env_rec["data"])["session_id"]
-                            )
+                            out.append(json.loads(line)["data"])
         return out
+
+    def stream_sessions(dest: str) -> list[str]:
+        return [json.loads(data)["session_id"] for data in stream_payloads(dest)]
 
     want_usa = sorted(r["session_id"] for r in records if r["country"] == "USA")
     want_intl = sorted(r["session_id"] for r in records if r["country"] != "USA")
@@ -454,13 +457,18 @@ def test_cli_etl_kill9_chaos_exactly_once(tmp_path):
         _, usa, intl = topos[kp]
         assert sorted(stream_sessions(usa)) == want_usa, f"{kp}: USA not exactly-once"
         assert sorted(stream_sessions(intl)) == want_intl, f"{kp}: intl not exactly-once"
+        quarantine = os.path.join(os.path.dirname(usa), "_quarantine")
+        assert stream_payloads(quarantine) == [malformed], (
+            f"{kp}: quarantine not exactly-once"
+        )
 
 
 def test_cli_etl_partial_epoch_retry_skips_committed_route(tmp_path, spark, capsys):
-    """Crash BETWEEN the two route writes (USA committed, International
-    not): the retried epoch must skip the already-committed USA route
-    (per-(epoch,route) marker) — no duplicates — and deliver the
-    International record exactly once."""
+    """Crash BETWEEN the two route commits of the epoch's one write job
+    (USA published, International not): the retried epoch re-runs the
+    job, and the writer's USA done-marker for this commitToken makes it
+    publish nothing to USA — no duplicates — while International gets
+    its record exactly once."""
     stream = str(tmp_path / "stream")
     usa = str(tmp_path / "usa")
     intl = str(tmp_path / "intl")
@@ -480,8 +488,8 @@ def test_cli_etl_partial_epoch_retry_skips_committed_route(tmp_path, spark, caps
             main(["produce", "--stream", stream, "--json-string", json.dumps(rec)])
             == 0
         )
-    # Failpoint in the SECOND route (International): USA publishes and
-    # writes its epoch marker, then the batch dies.
+    # Failpoint in the SECOND stream committed (International): USA
+    # publishes and writes its done-marker, then the batch dies.
     os.makedirs(intl, exist_ok=True)
     with open(os.path.join(intl, "_failpoint_before_commit"), "w") as fh:
         fh.write("arm")
@@ -489,7 +497,7 @@ def test_cli_etl_partial_epoch_retry_skips_committed_route(tmp_path, spark, caps
         main(etl_args)
     rows = spark.read.format("kinesis_sim").option("path", usa).load().collect()
     assert len(rows) == 1  # USA committed before the crash
-    assert main(etl_args) == 0  # retry: marker skips USA, writes intl
+    assert main(etl_args) == 0  # retry: done-marker skips USA, writes intl
     for dest, sid in ((usa, "s-cli-1"), (intl, "s-cli-2")):
         rows = (
             spark.read.format("kinesis_sim").option("path", dest).load().collect()

@@ -210,11 +210,19 @@ def test_dest_stream_pipeline_routes_sessions(spark, tmp_path, sf_dir):
         }
         for i in range(30)
     ]
+    # Malformed (credit_limit is not a number) yet partly parsed: the
+    # salvaged quantity "x" would fail T5's cast under ANSI, so the sink
+    # must quarantine the record without enriching it.
+    partial = json.dumps(
+        {"session_id": "s-bad", "credit_limit": "n/a",
+         "browse_history": [{"product_code": "p1", "quantity": "x"}]}
+    )
     src = tmp_path / "sessions_in"
     src.mkdir()
     with open(src / "batch.json", "w") as fh:
         for rec in sessions:
             fh.write(json.dumps(rec) + "\n")
+        fh.write(partial + "\n")
 
     dest = {
         "USA": str(tmp_path / "stream_usa"),
@@ -225,6 +233,7 @@ def test_dest_stream_pipeline_routes_sessions(spark, tmp_path, sf_dir):
     )
     q.stop()
 
+    kinesis_sim.register_format(spark)
     usa = spark.read.format("kinesis_sim").option("path", dest["USA"]).load()
     intl = spark.read.format("kinesis_sim").option("path", dest["International"]).load()
     assert usa.count() == sum(1 for s in sessions if s["country"] == "USA")
@@ -236,6 +245,10 @@ def test_dest_stream_pipeline_routes_sessions(spark, tmp_path, sf_dir):
             "total_different_products"} <= set(row)
     keys = {r.partition_key for r in usa.select("partition_key").collect()}
     assert keys == {s["session_id"] for s in sessions if s["country"] == "USA"}
+    bad = spark.read.format("kinesis_sim").option(
+        "path", str(tmp_path / "_quarantine")
+    ).load()
+    assert [r.data for r in bad.collect()] == [partial]
 
 
 def test_registered_roundtrip_query_matches_parquet(spark, sf_dir):

@@ -13,13 +13,22 @@ from pyspark.sql import functions as F
 
 from stream_ingestion_amazon_kinesis_spark.operators.enrichment import enrich_sessions
 from stream_ingestion_amazon_kinesis_spark.sources.catalog import load_table
-from stream_ingestion_amazon_kinesis_spark.sources.json_source import parse_json_records
+from stream_ingestion_amazon_kinesis_spark.sources.json_source import (
+    PERMISSIVE,
+    SESSION_SCHEMA_WITH_CORRUPT,
+    parse_json_records,
+)
+from stream_ingestion_amazon_kinesis_spark.sources.kinesis_sim import register_format
 from stream_ingestion_amazon_kinesis_spark.streaming import (
     dedup_event_stream,
     read_event_stream,
-    run_enrichment_pipeline,
     run_to_memory_sink,
     windowed_event_counts,
+)
+from stream_ingestion_amazon_kinesis_spark.streaming.pipeline import (
+    kinesis_sim_sink,
+    quarantine_stream,
+    run_kinesis_sim_pipeline,
 )
 from stream_ingestion_amazon_kinesis_spark.streaming.stateful import running_user_profiles
 
@@ -52,15 +61,31 @@ def session_dir(tmp_path):
     return str(d)
 
 
+def _dests(tmp_path) -> dict[str, str]:
+    dest = tmp_path / "dest"
+    return {"USA": str(dest / "usa"), "International": str(dest / "international")}
+
+
+def _read_stream(spark, path: str):
+    """A destination stream's records: (partition_key, data) rows."""
+    register_format(spark)
+    return spark.read.format("kinesis_sim").option("path", path).load()
+
+
+def _sessions(spark, path: str) -> list[dict]:
+    return [json.loads(r["data"]) for r in _read_stream(spark, path).collect()]
+
+
 def test_enrichment_pipeline_end_to_end(spark, tmp_path, session_dir):
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    q = run_enrichment_pipeline(spark, session_dir, out, ckpt, await_all_available=True)
+    dests = _dests(tmp_path)
+    q = run_kinesis_sim_pipeline(
+        spark, session_dir, dests, str(tmp_path / "ckpt"), await_all_available=True
+    )
     q.stop()
 
-    usa = spark.read.json(os.path.join(out, "usa"))
-    intl = spark.read.json(os.path.join(out, "international"))
-    errors = spark.read.json(os.path.join(out, "errors"))
+    usa = _sessions(spark, dests["USA"])
+    intl = _sessions(spark, dests["International"])
+    errors = _read_stream(spark, quarantine_stream(dests)).collect()
 
     # batch replay of the identical logic over the identical files
     raw = spark.read.text(session_dir).withColumnRenamed("value", "value")
@@ -69,14 +94,16 @@ def test_enrichment_pipeline_end_to_end(spark, tmp_path, session_dir):
     exp_usa = expected.filter(F.col("country") == "USA")
     exp_intl = expected.filter(F.col("country") != "USA")
 
-    assert usa.count() == exp_usa.count()
-    assert intl.count() == exp_intl.count()
-    assert errors.count() == quarantine.count() == 1
+    assert len(usa) == exp_usa.count()
+    assert len(intl) == exp_intl.count()
+    assert len(errors) == quarantine.count() == 1
+    # the malformed record is kept verbatim, keyed by its own text
+    assert errors[0]["data"] == errors[0]["partition_key"] == "{definitely not json"
 
     # spot-check enrichment values match the batch plan per session
     got = {
         r["session_id"]: (r["overall_product_quantity"], r["overall_in_shopping_cart"])
-        for r in usa.collect() + intl.collect()
+        for r in usa + intl
     }
     exp = {
         r["session_id"]: (r["overall_product_quantity"], r["overall_in_shopping_cart"])
@@ -86,17 +113,62 @@ def test_enrichment_pipeline_end_to_end(spark, tmp_path, session_dir):
 
 
 def test_enrichment_pipeline_exactly_once_on_restart(spark, tmp_path, session_dir):
-    out = str(tmp_path / "out")
+    dests = _dests(tmp_path)
     ckpt = str(tmp_path / "ckpt")
-    q = run_enrichment_pipeline(spark, session_dir, out, ckpt, await_all_available=True)
+
+    def counts():
+        return [
+            _read_stream(spark, p).count()
+            for p in (*dests.values(), quarantine_stream(dests))
+        ]
+
+    q = run_kinesis_sim_pipeline(spark, session_dir, dests, ckpt, await_all_available=True)
     q.stop()
-    n1 = spark.read.json(os.path.join(out, "usa")).count()
+    n1 = counts()
     # restart with the same checkpoint: no re-processing (vs the
     # reference's TRIM_HORIZON full replay, consumer.py:76)
-    q2 = run_enrichment_pipeline(spark, session_dir, out, ckpt, await_all_available=True)
+    q2 = run_kinesis_sim_pipeline(spark, session_dir, dests, ckpt, await_all_available=True)
     q2.stop()
-    n2 = spark.read.json(os.path.join(out, "usa")).count()
-    assert n1 == n2
+    assert counts() == n1 == [10, 20, 1]
+
+
+def test_sink_replayed_epoch_publishes_each_stream_once(spark, tmp_path, session_dir):
+    """A retried epoch (same epoch id, same checkpoint scope) must leave
+    USA, International and the quarantine with exactly one copy each:
+    the writer's per-stream done-marker turns the replay into a no-op."""
+    dests = _dests(tmp_path)
+    batch = (
+        spark.read.schema(SESSION_SCHEMA_WITH_CORRUPT)
+        .options(**PERMISSIVE)
+        .json(session_dir)
+    )
+    streams = (*dests.values(), quarantine_stream(dests))
+
+    def published():
+        return sorted(
+            os.path.join(root, f)
+            for stream in streams
+            for root, _dirs, files in os.walk(stream)
+            for f in files
+            if f.endswith(".jsonl")
+        )
+
+    write_batch = kinesis_sim_sink(dests, run_scope="replay")
+    write_batch(batch, 7)
+    first = published()
+    write_batch(batch, 7)
+    assert published() == first  # the replay published no file
+
+    def ids(path):
+        return sorted(r["partition_key"] for r in _read_stream(spark, path).collect())
+
+    assert ids(dests["USA"]) == sorted(
+        s["session_id"] for s in SESSIONS if s["country"] == "USA"
+    )
+    assert ids(dests["International"]) == sorted(
+        s["session_id"] for s in SESSIONS if s["country"] != "USA"
+    )
+    assert ids(quarantine_stream(dests)) == ["{definitely not json"]
 
 
 def _events_json_dir(spark, sf_dir, tmp_path, with_dupes=False):
@@ -176,17 +248,13 @@ def test_produce_records_feeds_pipeline(spark, tmp_path):
     ind = str(tmp_path / "in")
     produce_records(spark, SESSIONS[:5], ind)
     produce_records(spark, SESSIONS[5:10], ind)
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    q = run_enrichment_pipeline(spark, f"{ind}/*", out, ckpt, await_all_available=True)
-    q.stop()
-    import glob
-
-    total = sum(
-        spark.read.json(p).count()
-        for p in (os.path.join(out, "usa"), os.path.join(out, "international"))
-        if glob.glob(p + "/*")
+    dests = _dests(tmp_path)
+    q = run_kinesis_sim_pipeline(
+        spark, f"{ind}/*", dests, str(tmp_path / "ckpt"), await_all_available=True
     )
-    assert total == 10
+    q.stop()
+    got = sorted(s["session_id"] for p in dests.values() for s in _sessions(spark, p))
+    assert got == sorted(s["session_id"] for s in SESSIONS[:10])
 
 
 def test_stream_dedup_with_rocksdb_state_store(spark, sf_dir, tmp_path):
