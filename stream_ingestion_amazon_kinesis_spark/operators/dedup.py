@@ -18,14 +18,13 @@ Four tiers, each with a different cost/recall point at 100 TB:
 from __future__ import annotations
 
 import math
-import os
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..functions.numeric import mulmod32_sql
 from ..functions.text import shingles, tokens
-from ..plans.registry import guard_oracle_env_override, register
+from ..plans.registry import register
 from ..sources.catalog import load_table, spread
 
 
@@ -58,37 +57,22 @@ def exact_dedup_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the same (documented) approximation: Jaccard over the sub-stopword
 # token space. Worst-case join output is bounded by cap^2 per token.
 #
-# The DEFAULT is data-adaptive: cap = max(64, ceil(4 * sqrt(N_docs))).
+# The cap is data-adaptive: cap = max(64, ceil(4 * sqrt(N_docs))).
 # Rationale: a token with df = d emits d^2 candidate rows, so allowing d
 # up to k*sqrt(N) bounds per-token join output at k^2 * N — linear in
 # corpus size per token — with no fixture-tuned constant to retune when
 # the corpus grows 10x. Both engines compute the cap from the same count
 # with the same IEEE ops (sqrt is correctly rounded and *4 is exact, so
 # Python's math.ceil(4*math.sqrt(n)) == SQL CEIL(4*SQRT(n)) bit-for-bit).
-# Env override SPARK_GRAFT_TOKEN_DF_CAP pins a fixed cap on BOTH engines
-# (int()-validated at import so a malformed override — e.g. '1_000',
-# which Python's int() accepts but SQL does not — fails fast here
-# instead of silently desyncing the engine cap from the oracle literal).
-_TOKEN_DF_CAP_ENV_RAW = os.environ.get("SPARK_GRAFT_TOKEN_DF_CAP")
-_TOKEN_DF_CAP_ENV: int | None = (
-    int(_TOKEN_DF_CAP_ENV_RAW) if _TOKEN_DF_CAP_ENV_RAW else None
-)
-
-
 def token_df_cap(n_docs: int) -> int:
     """The within-source df cap for a corpus of `n_docs` documents."""
-    if _TOKEN_DF_CAP_ENV is not None:
-        return _TOKEN_DF_CAP_ENV
     return max(64, math.ceil(4.0 * math.sqrt(n_docs)))
 
 
 # SQL expression computing the SAME cap inside the oracle (scalar
 # subquery over the same `documents` view the Spark side counts).
-# str(int(...)) guarantees both engines see the same canonical literal.
 TOKEN_DF_CAP_SQL = (
-    str(_TOKEN_DF_CAP_ENV)
-    if _TOKEN_DF_CAP_ENV is not None
-    else "(SELECT GREATEST(64, CAST(CEIL(4 * SQRT(COUNT(*))) AS BIGINT)) FROM documents)"
+    "(SELECT GREATEST(64, CAST(CEIL(4 * SQRT(COUNT(*))) AS BIGINT)) FROM documents)"
 )
 
 
@@ -285,21 +269,15 @@ N_BANDS = 8  # 8 bands x 4 rows: ~P(candidate) = 1-(1-j^4)^8; j=0.8 -> 0.996
 # rows), preserving per-bucket connectivity for component clustering
 # while bounding the join output at cap^2/2 + k per bucket.
 #
-# The DEFAULT is data-adaptive: cap = max(64, ceil(2 * sqrt(N_docs))) —
+# The cap is data-adaptive: cap = max(64, ceil(2 * sqrt(N_docs))) —
 # same d^2-emission argument as token_df_cap: a bucket of k members
 # emits k^2/2 pairs, so capping k at ~sqrt(N) bounds per-bucket output
 # linear-in-N; a genuine dup cluster bigger than that still stays
-# connected through the star path. Rows-only path (no oracle parity
-# concern); the LSH recall twin re-validates the default at each SF.
-# Env override SPARK_GRAFT_LSH_BUCKET_CAP pins a fixed cap.
-_LSH_BUCKET_CAP_ENV = os.environ.get("SPARK_GRAFT_LSH_BUCKET_CAP")
-
-
+# connected through the star path. The oracle derives the same cap from
+# the same count; the LSH recall twin re-validates it at each SF.
 def lsh_bucket_cap(n_docs: int) -> int:
     """Star-path switchover size for LSH band buckets, for a corpus of
     `n_docs` documents."""
-    if _LSH_BUCKET_CAP_ENV:
-        return int(_LSH_BUCKET_CAP_ENV)
     return max(64, math.ceil(2.0 * math.sqrt(n_docs)))
 
 
@@ -401,9 +379,8 @@ def lsh_buckets(signatures: DataFrame, n_bands: int = N_BANDS) -> DataFrame:
 def _minhash_oracle() -> str:
     """The full MinHash+LSH candidate pipeline in DuckDB: same md5
     32-bit shingle hash, same affine permutations, same string band
-    buckets, same adaptive star-path cap (scalar subquery; the
-    SPARK_GRAFT_LSH_BUCKET_CAP env override is invisible to the oracle
-    — leave it unset when oracle-comparing), same exact-Jaccard verify.
+    buckets, same adaptive star-path cap (scalar subquery), same
+    exact-Jaccard verify.
     """
     h32 = _MD5_INT32.format(col="shingle")
     mins = ",\n               ".join(
@@ -475,9 +452,6 @@ def _minhash_oracle() -> str:
     twin_test="tests/test_dedup.py::test_minhash_lsh_recall",
 )
 def minhash_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    guard_oracle_env_override(
-        "minhash_lsh_neardup", "SPARK_GRAFT_LSH_BUCKET_CAP", _LSH_BUCKET_CAP_ENV
-    )
     docs = load_table(spark, sf_dir, "documents")
     cap = lsh_bucket_cap(docs.count())
     sig = minhash_signatures(docs)
@@ -967,7 +941,7 @@ def _prefix_relation(tok: DataFrame) -> DataFrame:
         tok.join(dfreq, ["source", "token"])
         .groupBy("doc_id")
         .agg(
-            F.first("source").alias("source"),
+            F.max("source").alias("source"),
             F.sort_array(F.collect_list(F.struct("df", "token"))).alias(
                 "arr"
             ),

@@ -17,7 +17,6 @@ counts (raw float ranking could flip on last-ulp differences).
 from __future__ import annotations
 
 import math
-import os
 
 import pandas as pd
 
@@ -26,7 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from ..functions.vectors import cosine_pre, norm
-from ..plans.registry import guard_oracle_env_override, register
+from ..plans.registry import register
 from ..sources.catalog import load_table, spread, table_rowcount
 
 N_QUERIES = 8
@@ -75,16 +74,14 @@ def ann_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Recall/latency knob (multi-probe IVF): SPARK_GRAFT_IVF_N_PROBE.
-N_PROBE = int(os.environ.get("SPARK_GRAFT_IVF_N_PROBE", "4"))
+# Cells each query probes (multi-probe IVF): the recall/latency trade.
+N_PROBE = 4
 
-# Coarse-quantizer cell count. DEFAULT is data-adaptive:
+# Coarse-quantizer cell count is data-adaptive:
 # cells = clamp(ceil(sqrt(N)), 16, 4096) — the textbook IVF sizing that
 # balances per-cell scan cost (N/cells) against probe fan-out, and
 # removes the fixture-tuned constant: 10x the corpus => ~3.2x the cells,
-# per-cell population grows only ~3.2x. Env override SPARK_GRAFT_IVF_CELLS
-# pins a fixed count. Rows-only paths (recall twins re-validate per SF).
-_IVF_CELLS_ENV = os.environ.get("SPARK_GRAFT_IVF_CELLS")
+# per-cell population grows only ~3.2x. Recall twins re-validate per SF.
 IVF_TRAIN_CAP = 4096  # deterministic bounded training sample (vec_id order)
 
 
@@ -105,8 +102,6 @@ def ivf_train_cap(n_cells: int) -> int:
 
 def ivf_n_cells(n_vectors: int) -> int:
     """Adaptive coarse-quantizer size for a corpus of `n_vectors`."""
-    if _IVF_CELLS_ENV:
-        return int(_IVF_CELLS_ENV)
     return max(16, min(4096, math.ceil(math.sqrt(n_vectors))))
 
 
@@ -219,12 +214,11 @@ NEARDUP_COS_THRESHOLD = 0.35
 # assignments suffice); matching it needs 4 of the quantizer's cells per
 # vector. Join cost grows with n_assign^2 per co-assigned cell but stays
 # linear in corpus size — the win over the O(N^2) unblocked self-join.
-# Recall/latency knob (multi-assign blocking): SPARK_GRAFT_IVF_N_ASSIGN.
-N_ASSIGN_NEARDUP = int(os.environ.get("SPARK_GRAFT_IVF_N_ASSIGN", "4"))
+N_ASSIGN_NEARDUP = 4
 # Target rows per near-dup blocking cell INCLUDING multi-assignment —
 # pins each cell's Gram matrix size so total verify cost scales
 # linearly with the corpus (see embedding_neardup_ivf docstring).
-NEARDUP_CELL_POP = int(os.environ.get("SPARK_GRAFT_NEARDUP_CELL_POP", "1024"))
+NEARDUP_CELL_POP = 1024
 
 
 @register(
@@ -262,10 +256,7 @@ def embedding_neardup_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     (see ivf_centroids_kmeans scale note), keeping per-cell population
     pinned with a coarse+fine cell id as the blocking key."""
     emb = load_table(spark, sf_dir, "embeddings")
-    coarse = None
-    if not _IVF_CELLS_ENV:
-        n = emb.count()
-        coarse = max(4, -(-N_ASSIGN_NEARDUP * n // NEARDUP_CELL_POP))
+    coarse = max(4, -(-N_ASSIGN_NEARDUP * emb.count() // NEARDUP_CELL_POP))
     centroids = ivf_centroids_kmeans(emb, n_cells=coarse)
     assigned = ivf_assign(emb, centroids, n_assign=N_ASSIGN_NEARDUP).select(
         "cell", "vec_id", "embedding"
@@ -1572,11 +1563,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ivf_n_cells, and the rerank scores candidates with the quantized
     cosine (exact int64 dot + one IEEE sqrt/divide/round), so the whole
     query — cells, probes, rerank — is reproduced verbatim by the
-    DuckDB oracle. SPARK_GRAFT_IVF_N_PROBE stays oracle-synced (it is
-    interpolated into the oracle at import), but SPARK_GRAFT_IVF_CELLS
-    is engine-only — the oracle derives cells adaptively — so setting
-    it raises unless SPARK_GRAFT_UNSAFE_ENV_OVERRIDES=1 acknowledges
-    the desync (ADVICE r9).
+    DuckDB oracle.
 
     Scale: identical shape to the float IVF — the corpus moves once
     through assignment, the probe relation is queries x N_PROBE rows
@@ -1585,9 +1572,6 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     embeddings because qv rides the assignment, saving the candidate
     re-join the float variant pays.
     """
-    guard_oracle_env_override(
-        "ann_ivf_topk", "SPARK_GRAFT_IVF_CELLS", _IVF_CELLS_ENV
-    )
     q = _km_quantized(spark, sf_dir)
     k = ivf_n_cells(table_rowcount(sf_dir, "embeddings"))
     c0 = q.filter(F.col("vec_id") < k).select(

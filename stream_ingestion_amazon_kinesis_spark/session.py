@@ -18,6 +18,17 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def driver_memory() -> str:
+    """Driver heap: SPARK_GRAFT_DRIVER_MEM when set (a deployment
+    setting), else min(16 GiB, 3/4 of physical RAM) so the default heap
+    always leaves the OS and the Python workers room on the box."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(16 << 30, ram * 3 // 4) >> 20}m"
+
+
 def get_spark(app_name: str = "stream_ingestion_amazon_kinesis_spark") -> SparkSession:
     cpus = default_parallelism()
     builder = (
@@ -48,7 +59,7 @@ def get_spark(app_name: str = "stream_ingestion_amazon_kinesis_spark") -> SparkS
         # Progress bars interleave with line-oriented tool output
         # (check_oracle / sweep / bench parse stdout); UI-only setting.
         .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_memory())
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -1,6 +1,6 @@
 """Cross-engine parity of the data-adaptive blocking-cap formulas.
 
-The dedup family's hot-token cap default is computed in Python on the
+The dedup family's hot-token cap is computed in Python on the
 Spark side (`token_df_cap`) and as a scalar subquery inside the DuckDB
 oracle (`TOKEN_DF_CAP_SQL`). Both reduce to GREATEST(64,
 CEIL(4*SQRT(n))) — IEEE sqrt is correctly rounded and *4 is an exact
@@ -15,13 +15,10 @@ from __future__ import annotations
 import math
 
 import duckdb
-import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from stream_ingestion_amazon_kinesis_spark.operators.dedup import (
-    _LSH_BUCKET_CAP_ENV,
-    _TOKEN_DF_CAP_ENV,
     lsh_bucket_cap,
     token_df_cap,
 )
@@ -29,9 +26,6 @@ from stream_ingestion_amazon_kinesis_spark.operators.dedup import (
 _con = duckdb.connect()
 
 
-@pytest.mark.skipif(
-    bool(_TOKEN_DF_CAP_ENV), reason="env override pins the cap; formula unused"
-)
 @settings(max_examples=300, deadline=None)
 @given(st.integers(min_value=0, max_value=10**12))
 def test_token_df_cap_matches_oracle_formula(n):
@@ -41,9 +35,6 @@ def test_token_df_cap_matches_oracle_formula(n):
     assert token_df_cap(n) == sql
 
 
-@pytest.mark.skipif(
-    bool(_LSH_BUCKET_CAP_ENV), reason="env override pins the cap; formula unused"
-)
 @settings(max_examples=100, deadline=None)
 @given(st.integers(min_value=0, max_value=10**12))
 def test_lsh_bucket_cap_monotone_and_bounded(n):
@@ -55,40 +46,9 @@ def test_lsh_bucket_cap_monotone_and_bounded(n):
 
 
 def test_cap_values_at_fixture_sizes():
-    # The documented defaults at the shipped fixture sizes (and sf1).
+    # The documented caps at the shipped fixture sizes (and sf1).
     assert token_df_cap(500) == 90
     assert token_df_cap(5000) == 283
     assert token_df_cap(50000) == 895
     assert lsh_bucket_cap(5000) == 142
 
-
-def test_oracle_env_override_guard(monkeypatch):
-    """ADVICE r9: an engine-only env override (the static oracle derives
-    the same parameter adaptively and cannot see it) must fail FAST with
-    a clear message instead of surfacing as a confusing value mismatch
-    at gate time — unless the experimenter explicitly acknowledges.
-
-    ADVICE r10: the guard judges the IMPORT-TIME captured value the
-    operator actually uses (passed by the caller), not a live
-    os.environ read — a var set after import must not raise (the engine
-    still runs the oracle-synced default) and a var unset after import
-    must still raise (the override is active)."""
-    from stream_ingestion_amazon_kinesis_spark.plans.registry import (
-        guard_oracle_env_override,
-    )
-
-    monkeypatch.delenv("SPARK_GRAFT_UNSAFE_ENV_OVERRIDES", raising=False)
-    # no frozen override -> no-op, even if the var is set NOW (the
-    # operator module captured None at import and still runs defaults)
-    monkeypatch.setenv("SPARK_GRAFT_IVF_CELLS", "128")
-    guard_oracle_env_override("ann_ivf_topk", "SPARK_GRAFT_IVF_CELLS", None)
-    # frozen override -> loud failure naming the query, the var, and
-    # the opt-out — even if the var was unset after import
-    monkeypatch.delenv("SPARK_GRAFT_IVF_CELLS", raising=False)
-    with pytest.raises(RuntimeError, match="SPARK_GRAFT_IVF_CELLS"):
-        guard_oracle_env_override(
-            "ann_ivf_topk", "SPARK_GRAFT_IVF_CELLS", "128"
-        )
-    # explicit acknowledgment -> allowed (perf experiments)
-    monkeypatch.setenv("SPARK_GRAFT_UNSAFE_ENV_OVERRIDES", "1")
-    guard_oracle_env_override("ann_ivf_topk", "SPARK_GRAFT_IVF_CELLS", "128")

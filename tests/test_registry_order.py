@@ -1,257 +1,63 @@
 """Registry iteration order contract.
 
-The external correctness harness samples the FIRST 50 names in
-`queries()` iteration order each round. Rounds 1-7 shipped an
-import-order head that was all-relational, so the dedup / similarity /
-retrieval / streaming / graph families never received a driver-stamped
-correctness record. Rounds 8-9 pinned an explicit 50-name head; round
-10 split it into ANCHORS + ROTATION (verdict r9 #4): ~26 flagship
-anchors stay pinned while the remaining slots advance deterministically
-with the round number (derived from committed CORRECTNESS_r*.json
-artifacts), so successive driver rounds accumulate coverage of the
-whole oracle-backed surface. This module pins the rotation RULE.
+`queries()` / `oracle_sql()` iterate QUERIES, whose order is plain
+@register() call order: nothing reorders it after the operator modules
+are imported, so the order is a function of the code alone.
 """
 
 from __future__ import annotations
 
-import json
 import os
+import subprocess
+import sys
 
 from stream_ingestion_amazon_kinesis_spark.plans.registry import (
-    PRIORITY_ANCHORS,
-    PRIORITY_HEAD,
     QUERIES,
-    WINDOW_SIZE,
-    _latest_correctness_round,
     _load_all,
-    priority_head,
-    resolve_round,
-    rotation_pool,
 )
 
-_load_all()
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# A fresh interpreter, so the recorder is installed before any operator
+# module binds `register` at import.
+_RECORD_ORDER = r"""
+import sys
 
+sys.path.insert(0, {repo!r})
 
-def test_priority_head_leads_iteration_order():
-    assert list(QUERIES)[: len(PRIORITY_HEAD)] == PRIORITY_HEAD
+from stream_ingestion_amazon_kinesis_spark.plans import registry
 
-
-def test_priority_head_is_50_unique_registered_names():
-    assert len(PRIORITY_HEAD) == WINDOW_SIZE == 50
-    assert len(set(PRIORITY_HEAD)) == 50
-    missing = [n for n in PRIORITY_HEAD if n not in QUERIES]
-    assert not missing, f"head names not in registry: {missing}"
-
-
-def test_anchors_pinned_and_cover_north_star_families():
-    # Anchors lead the window every round, in order, and keep one
-    # driver-checked representative per operator family.
-    assert PRIORITY_HEAD[: len(PRIORITY_ANCHORS)] == PRIORITY_ANCHORS
-    for name in (
-        "flagship_session_enrichment",
-        "q1_pricing_summary",
-        "tumbling_window_events",
-        "streaming_tumbling_counts_live",
-        "streaming_curation_pipeline_live",
-        "exact_dedup_documents",
-        "minhash_lsh_neardup",
-        "ann_topk_cosine",
-        "ann_ivf_topk",
-        "semdedup_cluster_prune",
-        "bm25_retrieval_topk",
-        "document_quality_scores",
-        "bpe_merge_training",
-        "pagerank_supplier_cooccurrence",
-        "multimodal_real_decode_stats",
-    ):
-        assert name in PRIORITY_ANCHORS, name
+calls = []
+_register = registry.register
 
 
-def test_window_is_fully_oracle_backed():
-    # Rotated slots draw only from the oracle-backed pool, and every
-    # anchor carries an exact oracle too — the driver window stays
-    # maximally hash-checkable.
-    rows_only = [n for n in PRIORITY_HEAD if QUERIES[n].oracle is None]
-    assert not rows_only, rows_only
+def recording_register(name, *args, **kwargs):
+    calls.append(name)
+    return _register(name, *args, **kwargs)
 
 
-def test_rotation_rule_is_deterministic_and_unstamped_first():
-    from stream_ingestion_amazon_kinesis_spark.plans.registry import (
-        ROTATION_FRONT,
+registry.register = recording_register
+registry._load_all()
+assert list(registry.QUERIES) == calls, "QUERIES order != @register order"
+print(len(calls))
+"""
+
+
+def test_iteration_order_is_registration_order():
+    out = subprocess.run(
+        [sys.executable, "-c", _RECORD_ORDER.format(repo=REPO)],
+        capture_output=True,
+        text=True,
+        timeout=300,
     )
-
-    pool = rotation_pool()
-    pool_set = set(pool)
-    slots = WINDOW_SIZE - len(PRIORITY_ANCHORS)
-    n_anchor = len(PRIORITY_ANCHORS)
-    # deterministic: same (round, stamped set) -> same window
-    assert priority_head(10) == priority_head(10)
-    # unstamped-first, fast-track front: with enough unstamped names
-    # the slots are the unstamped ROTATION_FRONT entries then sorted
-    # unstamped pool names, regardless of round number
-    stamped = set(pool[: len(pool) // 2])
-    h = priority_head(10, stamped=stamped)
-    assert h[:n_anchor] == PRIORITY_ANCHORS
-    front = [
-        n for n in ROTATION_FRONT if n in pool_set and n not in stamped
-    ]
-    unstamped = front + [
-        n for n in pool if n not in stamped and n not in set(front)
-    ]
-    assert h[n_anchor:] == unstamped[:slots]
-    assert priority_head(3, stamped=stamped) == h  # round-independent
-    # simulated driver progression: each round stamps its window; every
-    # pool entry receives a stamp within ceil(len(pool)/slots) rounds
-    seen: set[str] = set()
-    rounds = -(-len(pool) // slots)
-    for r in range(1, rounds + 1):
-        seen.update(priority_head(r, stamped=seen)[n_anchor:])
-    assert seen == set(pool)
-    # exhausted-unstamped fallback: the offset ring re-cycles stamped
-    # names deterministically and still fills all slots
-    all_stamped = set(pool)
-    h1 = priority_head(1, stamped=all_stamped)
-    h2 = priority_head(2, stamped=all_stamped)
-    assert len(h1) == len(h2) == 50
-    off = ((2 - 1) * slots) % len(pool)
-    assert h2[n_anchor:] == [pool[(off + i) % len(pool)] for i in range(slots)]
-    assert not set(h1[n_anchor:]) & set(h2[n_anchor:])  # disjoint slices
-    # partial fallback: slots split between the unstamped remainder and
-    # the stamped ring, no duplicates
-    few = [n for n in pool if n not in set(pool[:3])]
-    hp = priority_head(5, stamped=set(few))
-    assert set(hp[n_anchor : n_anchor + 3]) == set(pool[:3])
-    assert len(set(hp)) == 50
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert int(out.stdout.split()[-1]) == 378
 
 
-def test_window_fronts_newest_post_gate_operators():
-    # The concrete r10-verdict ask: the round-10 post-gate operators
-    # must reach the driver window until stamped. Newest-first makes
-    # all still-unstamped ones appear; once a committed CORRECTNESS
-    # record stamps one, it legitimately rotates out (the r11 window
-    # carried and stamped all four), so the durable invariant is
-    # "stamped OR fronted", not "in this round's window".
-    from stream_ingestion_amazon_kinesis_spark.plans.registry import (
-        stamped_names,
-    )
-
-    post_gate = {
-        "hll_custom_exact_distinct",
-        "cms_custom_exact_frequencies",
-        "bpe_encode_token_stats",
-        "canonical_dedup_selection",
-    }
-    stamped = stamped_names()
-    unstamped_post = post_gate - stamped
-    in_window = post_gate & set(PRIORITY_HEAD)
-    assert unstamped_post <= in_window
-    if stamped:  # on the real artifact tree: none may be unaccounted
-        missing = post_gate - stamped - in_window
-        assert not missing, missing
-
-
-def test_revalidate_pins_rewritten_queries_for_their_round():
-    # ADVICE r11: queries whose result-producing logic was rewritten
-    # while already driver-stamped must re-enter the window in the
-    # round that ships the rewrite. REVALIDATE entries lead that
-    # round's rotation slots and expire with the round.
-    from stream_ingestion_amazon_kinesis_spark.plans.registry import (
-        REVALIDATE,
-    )
-
-    pool = set(rotation_pool())
-    n_anchor = len(PRIORITY_ANCHORS)
-    for rnd, names in REVALIDATE.items():
-        h = priority_head(rnd, stamped=pool)  # worst case: all stamped
-        lead = h[n_anchor : n_anchor + len(names)]
-        assert lead == [n for n in names if n in pool], (rnd, lead)
-        assert len(set(h)) == WINDOW_SIZE
-    # expiry: a round with no entry carries no pin
-    h_other = priority_head(max(REVALIDATE) + 1, stamped=set())
-    front_12 = REVALIDATE[max(REVALIDATE)]
-    assert h_other[n_anchor : n_anchor + len(front_12)] != front_12
-    # the real current window fronts this round's revalidations
-    if resolve_round() in REVALIDATE:
-        for name in REVALIDATE[resolve_round()]:
-            assert name in PRIORITY_HEAD, name
-
-
-def test_current_round_derivation_matches_artifacts():
-    best = 0
-    for f in os.listdir(_REPO):
-        if f.startswith("CORRECTNESS_r") and f.endswith(".json"):
-            try:
-                best = max(best, int(f[len("CORRECTNESS_r") : -len(".json")]))
-            except ValueError:
-                pass
-    assert _latest_correctness_round() == best
-    # Resolution (ADVICE r10): env pin > max(scan + 1, ROUND floor).
-    env = os.environ.get("SPARK_GRAFT_ROUND")
-    if env:
-        expected = int(env)
-    else:
-        floor = 0
-        round_path = os.path.join(_REPO, "ROUND")
-        if os.path.exists(round_path):
-            with open(round_path) as f:
-                floor = int(f.read().strip())
-        expected = max(best + 1, floor)
-    assert resolve_round() == expected
-    assert PRIORITY_HEAD == priority_head(expected)
-
-
-def test_round_floor_protects_artifactless_checkouts(monkeypatch):
-    from stream_ingestion_amazon_kinesis_spark.plans import registry
-
-    # env pin wins outright
-    monkeypatch.setenv("SPARK_GRAFT_ROUND", "7")
-    assert registry.resolve_round() == 7
-    monkeypatch.delenv("SPARK_GRAFT_ROUND")
-    # without artifacts (fresh clone / installed package) the committed
-    # ROUND floor keeps the window from collapsing to round 1
-    monkeypatch.setattr(registry, "_latest_correctness_round", lambda: 0)
-    monkeypatch.setattr(registry, "_round_floor", lambda: 11)
-    assert registry.resolve_round() == 11
-    # and the scan still self-advances past a stale floor
-    monkeypatch.setattr(registry, "_latest_correctness_round", lambda: 14)
-    assert registry.resolve_round() == 15
-
-
-def test_rotation_accumulates_fresh_driver_coverage():
-    # Unstamped-first rotation: as long as >= `slots` pool names have
-    # no driver stamp yet, EVERY rotation slot is never-stamped (the
-    # r10 verdict's acceptance bar was >= 20; unstamped-first makes it
-    # all 24 by construction until the pool is nearly exhausted).
-    from stream_ingestion_amazon_kinesis_spark.plans.registry import (
-        stamped_names,
-    )
-
-    from stream_ingestion_amazon_kinesis_spark.plans.registry import (
-        REVALIDATE,
-    )
-
-    stamped = stamped_names()
-    if not stamped:
-        return  # artifactless checkout — nothing to measure against
-    slots = 50 - len(PRIORITY_ANCHORS)
-    # This round's revalidation pins legitimately occupy slots with
-    # already-stamped (rewritten) names — see REVALIDATE.
-    n_reval = len(
-        [n for n in REVALIDATE.get(resolve_round(), []) if n in stamped]
-    )
-    n_unstamped_pool = len([n for n in rotation_pool() if n not in stamped])
-    fresh = [n for n in PRIORITY_HEAD if n not in stamped]
-    assert len(fresh) >= min(slots - n_reval, n_unstamped_pool), fresh
-
-
-def test_reorder_is_idempotent_and_lossless():
-    from stream_ingestion_amazon_kinesis_spark.plans.registry import (
-        _reorder_priority,
-    )
-
-    before = dict(QUERIES)
-    _reorder_priority()
-    assert dict(QUERIES) == before
-    assert list(QUERIES) == list(before)
+def test_reload_keeps_keys_and_order_and_contract_size():
+    _load_all()
+    before = list(QUERIES.items())
+    _load_all()
+    assert list(QUERIES.items()) == before
+    assert len(QUERIES) == 378
+    assert sum(1 for s in QUERIES.values() if s.oracle is not None) == 371
