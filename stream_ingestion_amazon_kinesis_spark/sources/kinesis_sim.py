@@ -17,20 +17,27 @@ instead of a driver-side loop:
                     per micro-batch in ``latestOffset``
 - TRIM_HORIZON / LATEST -> ``startingPosition`` option handled in
                     ``initialOffset``
-- put_record(PartitionKey=k) -> batch writer that routes each row to
-                    ``crc32(k) % num_shards``, with Spark's two-phase
-                    task-write / driver-commit protocol replacing the
-                    per-record HTTP call
+- put_record(PartitionKey=k) -> rows routed to ``crc32(k) % num_shards``
+                    and staged, then published by the driver instead of
+                    one HTTP call per record
 
 On-disk stream layout (a "stream" is a directory):
 
-    <stream>/shard-00000/part-<taskid>.jsonl
+    <stream>/shard-00000/part-<index>-[<commitToken>-]<12 hex>.jsonl
     <stream>/shard-00001/part-...
+    <stream>/_epochs/w-<commitToken>      done-marker of a token's publish
 
 Each line is one record envelope: ``{"partitionKey": str, "data": str}``.
 A record's sequence number is its 0-based position within the shard
 (part files ordered by name), mirroring Kinesis' monotone per-shard
 sequence numbers.
+
+Two write paths share that format and one publish protocol
+(``publish_stream``): ``format("kinesis_sim")`` batch writes stage part
+files from Python tasks and publish on the DataSource driver commit;
+``write_streams``, the streaming demux sink's path, stages several
+streams in one job with Spark's built-in text writer and publishes from
+the calling driver process.
 
 Everything inside reader/writer methods is stdlib-only so the pickled
 class works on any executor without the package installed.
@@ -41,6 +48,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 import uuid
 import zlib
 from dataclasses import dataclass
@@ -74,7 +82,7 @@ def _shard_dirs(path: str) -> list[str]:
 
 # Committed part files carry a zero-padded per-shard index so appends
 # always sort after existing files; anything else is a legacy name that
-# commit() migrates before appending (see KinesisSimWriter.commit).
+# publish_stream migrates before appending.
 _INDEXED_RE = re.compile(r"^part-\d{8}-")
 
 
@@ -86,27 +94,32 @@ def _shard_files(shard_dir: str) -> list[str]:
     )
 
 
-def _iter_shard_records(shard_dir: str):
-    """Yield (seq, envelope_dict) across the shard's part files in
-    name order — the per-shard sequence-number space."""
+def _iter_shard_records(shard_dir: str, start: int, end: int):
+    """Yield (seq, envelope_dict) for sequence numbers [start, end)
+    (end -1 = to the shard's tail), across the shard's part files in
+    name order — the per-shard sequence-number space. Records below
+    `start` are counted, not decoded."""
     seq = 0
     for fpath in _shard_files(shard_dir):
         with open(fpath, encoding="utf-8") as fh:
             for line in fh:
                 line = line.strip()
-                if line:
+                if not line:
+                    continue
+                if 0 <= end <= seq:
+                    return
+                if seq >= start:
                     yield seq, json.loads(line)
-                    seq += 1
+                seq += 1
+
+
+def _file_length(fpath: str) -> int:
+    with open(fpath, encoding="utf-8") as fh:
+        return sum(1 for line in fh if line.strip())
 
 
 def _shard_length(shard_dir: str) -> int:
-    n = 0
-    for fpath in _shard_files(shard_dir):
-        with open(fpath, encoding="utf-8") as fh:
-            for line in fh:
-                if line.strip():
-                    n += 1
-    return n
+    return sum(_file_length(f) for f in _shard_files(shard_dir))
 
 
 @dataclass
@@ -126,11 +139,7 @@ def _read_shard(part: ShardPartition):
     shard_id = os.path.basename(part.shard_dir)
 
     def rows():
-        for seq, env in _iter_shard_records(part.shard_dir):
-            if seq < part.start:
-                continue
-            if part.end >= 0 and seq >= part.end:
-                break
+        for seq, env in _iter_shard_records(part.shard_dir, part.start, part.end):
             yield (shard_id, seq, env.get("partitionKey"), env.get("data"))
 
     try:
@@ -182,11 +191,33 @@ class KinesisSimStreamReader(DataSourceStreamReader):
         self.path = path
         self.starting_position = starting_position
         self.max_fetch = max_fetch
+        # Record count per part file, keyed by (path, size): a published
+        # file never changes under its name, so each trigger reads only
+        # the files that appeared since the previous one.
+        self._file_lengths: dict[tuple[str, int], int] = {}
+
+    def _shard_tails(self) -> dict[str, int]:
+        """Each shard's record count, from the per-file cache. Entries of
+        files no longer listed drop out, so the cache tracks the stream's
+        current file set."""
+        known, self._file_lengths = self._file_lengths, {}
+        tails = {}
+        for d in _shard_dirs(self.path):
+            n = 0
+            for f in _shard_files(d):
+                key = (f, os.path.getsize(f))
+                length = known.get(key)
+                if length is None:
+                    length = _file_length(f)
+                self._file_lengths[key] = length
+                n += length
+            tails[os.path.basename(d)] = n
+        return tails
 
     def initialOffset(self) -> dict:
         # TRIM_HORIZON -> start of every shard; LATEST -> current tail.
         if self.starting_position == "LATEST":
-            return {os.path.basename(d): _shard_length(d) for d in _shard_dirs(self.path)}
+            return self._shard_tails()
         return {os.path.basename(d): 0 for d in _shard_dirs(self.path)}
 
     def latestOffset(self) -> dict:
@@ -198,12 +229,10 @@ class KinesisSimStreamReader(DataSourceStreamReader):
         cur = getattr(self, "_cursor", None)
         if cur is None:
             cur = self.initialOffset()
-        out = {}
-        for d in _shard_dirs(self.path):
-            sid = os.path.basename(d)
-            tail = _shard_length(d)
-            at = cur.get(sid, 0)
-            out[sid] = min(tail, at + self.max_fetch)
+        out = {
+            sid: min(tail, cur.get(sid, 0) + self.max_fetch)
+            for sid, tail in self._shard_tails().items()
+        }
         self._cursor = out
         return out
 
@@ -261,7 +290,7 @@ def _consume_killpoint(stream_dir: str, name: str) -> None:
     makes the calling code deliver SIGKILL to the etl driver (pid from
     SPARK_GRAFT_DRIVER_PID, set by __main__.main) AND to the calling
     process at this exact point — a genuine uncontrolled death, unlike
-    the exception failpoint (which unwinds through abort()). Single-shot:
+    the exception failpoint (which unwinds). Single-shot:
     the file is consumed first, so the restarted run proceeds. Test-only;
     two os.path.exists misses per call in normal operation."""
     import signal
@@ -285,183 +314,213 @@ def _remove_staged(tmp_paths) -> None:
             os.remove(tmp)
 
 
+def _drop_empty_staging(stream: str) -> None:
+    staging = os.path.join(stream, "_staging")
+    if os.path.isdir(staging) and not os.listdir(staging):
+        os.rmdir(staging)
+
+
+def publish_stream(stream: str, files: list, token: str | None) -> None:
+    """Publish staged part files into `stream`: the one commit protocol
+    of every kinesis_sim write. `files` holds (shard, staged path) pairs;
+    each file is moved to shard-<shard>/part-<index>-[<token>-]<12 hex>.jsonl.
+    A stream with no staged files publishes nothing.
+
+    `token` is the idempotence token for epoch retries (the streaming
+    sink's <checkpoint-scope>e<epoch>): the publish embeds it in file
+    names, rolls back a torn previous attempt of the SAME token first,
+    and records the `_epochs/w-<token>` done-marker after — so a retried
+    epoch converges to exactly one copy in the stream no matter where
+    the previous attempt died. None (plain batch writes) appends."""
+    if not files:
+        return
+    # Crash-injection failpoint for the exactly-once tests: a file
+    # named _failpoint_before_commit in the stream dir makes this
+    # publish die AFTER the files landed in staging but BEFORE any of
+    # them is published — the torn-write moment. Single-shot (the file
+    # is consumed) and file-based because the DataSource commit runs in
+    # a separate Python worker process where a test's monkeypatch/env
+    # can't reach. No-op in normal operation.
+    failpoint = os.path.join(stream, "_failpoint_before_commit")
+    if os.path.exists(failpoint):
+        os.remove(failpoint)
+        raise RuntimeError("kinesis_sim failpoint: injected crash before commit")
+    # kill -9 drill points: staged, nothing published yet / torn
+    # mid-publish / this stream done, the next not started. See
+    # _consume_killpoint.
+    _consume_killpoint(stream, "_killpoint_before_publish")
+    kill_mid_publish = os.path.exists(os.path.join(stream, "_killpoint_mid_publish"))
+    done_marker = os.path.join(stream, "_epochs", f"w-{token}") if token else None
+    if done_marker and os.path.exists(done_marker):
+        # This exact (checkpoint-scope, epoch) already published to
+        # this stream in a previous attempt that died before the
+        # epoch committed: drop the retry's staged files, publish
+        # nothing — the stream already holds exactly one copy.
+        _remove_staged(tmp for _shard, tmp in files)
+        return
+    os.makedirs(stream, exist_ok=True)
+    if token:
+        # Roll back a TORN previous attempt of this same token: any
+        # published file carrying the token sits at its shard's tail
+        # (it was appended by the dead attempt and the epoch never
+        # committed), so deleting it restores the pre-epoch state and
+        # the republish below lands at the same sequence numbers.
+        for d in _shard_dirs(stream):
+            for f in _shard_files(d):
+                if f"-{token}-" in os.path.basename(f):
+                    os.remove(f)
+    # Sequence numbers are defined by FILE-NAME order within a shard
+    # (_iter_shard_records), so appended files MUST sort after every
+    # existing file or a later append would renumber records a
+    # checkpointed reader already consumed (caught as a real
+    # duplicate+skip in the round-4 etl incremental-resume test: a
+    # lower-sorting uuid part file shifted the committed offsets).
+    # Each new file therefore gets a zero-padded per-shard index =
+    # count of existing files + arrival order; the random suffix
+    # keeps concurrent committers collision-free, and zero-padded
+    # indices always sort after lower ones regardless of suffix.
+    # Legacy migration: streams written BEFORE the zero-padded-index
+    # fix hold uuid-named parts (part-<taskid>.jsonl) that new
+    # indexed names can sort BEFORE (e.g. part-00000002-x <
+    # part-3fa9...), renumbering offsets a checkpointed reader has
+    # already consumed — the same duplicate/skip bug the index fix
+    # closed, alive on legacy data. Before appending, rename every
+    # existing file to its canonical index in the CURRENT sorted
+    # order (the order consumers have been reading), which preserves
+    # all record positions and guarantees appends sort after.
+    next_idx: dict[int, int] = {}
+    for shard, tmp in files:
+        shard_dir = os.path.join(stream, f"shard-{shard:05d}")
+        os.makedirs(shard_dir, exist_ok=True)
+        if shard not in next_idx:
+            existing = _shard_files(shard_dir)
+            if any(not _INDEXED_RE.match(os.path.basename(f)) for f in existing):
+                for i, f in enumerate(existing):
+                    tail = os.path.basename(f)[len("part-"):]
+                    canon = os.path.join(shard_dir, f"part-{i:08d}-{tail}")
+                    if f != canon:
+                        os.replace(f, canon)
+                existing = _shard_files(shard_dir)
+            next_idx[shard] = len(existing)
+        idx = next_idx[shard]
+        next_idx[shard] = idx + 1
+        suffix = uuid.uuid4().hex[:12]
+        if token:
+            suffix = f"{token}-{suffix}"
+        os.replace(tmp, os.path.join(shard_dir, f"part-{idx:08d}-{suffix}.jsonl"))
+        if kill_mid_publish:
+            # consume + SIGKILL after the FIRST publish: a
+            # genuinely torn multi-file publish for the drill.
+            _consume_killpoint(stream, "_killpoint_mid_publish")
+    if done_marker:
+        os.makedirs(os.path.dirname(done_marker), exist_ok=True)
+        with open(done_marker, "w", encoding="utf-8") as fh:
+            fh.write("ok")
+    _consume_killpoint(stream, "_killpoint_between_routes")
+
+
 @dataclass
 class ShardWriteCommit(WriterCommitMessage):
-    files: list  # (stream, final_relpath, tmp_path) triples
+    files: list  # (shard, staged path) pairs
 
 
-# Writer routing columns. A frame that also carries a `stream` column
-# names each row's destination stream (the put_record StreamName);
-# without one every row goes to the `path` stream.
-KEY_COL, DATA_COL, STREAM_COL = "partition_key", "data", "stream"
+# Columns a written frame carries: the partition key (shard routing)
+# and the payload.
+KEY_COL, DATA_COL = "partition_key", "data"
+NUM_SHARDS = 4  # shard count of a new stream unless a write says otherwise
 
 
 class KinesisSimWriter(DataSourceWriter):
     """put_record twin: route rows to shards by partition key, write
     per-task part files to a staging area, publish on driver commit —
     Spark's two-phase commit standing in for the service-side append.
-    One write job can feed several streams (the `stream` column), and
-    commit() publishes each of them under the same protocol.
     """
 
-    def __init__(
-        self,
-        path: str,
-        num_shards: int,
-        commit_token: str | None = None,
-        has_stream_col: bool = False,
-    ):
+    def __init__(self, path: str, num_shards: int, commit_token: str | None = None):
         self.path = path
         self.num_shards = num_shards
-        # Idempotence token for epoch retries (option commitToken, set by
-        # the streaming sink to <checkpoint-scope>e<epoch>): commit()
-        # embeds it in published file names, rolls back a torn previous
-        # attempt of the SAME token before publishing, and records a
-        # per-stream done-marker after — so a retried epoch converges to
-        # exactly one copy in every stream no matter where the previous
-        # attempt died. None (plain batch writes) keeps the plain append
-        # behavior.
-        self.commit_token = commit_token
-        self.has_stream_col = has_stream_col
+        self.commit_token = commit_token  # see publish_stream
 
     def write(self, iterator) -> ShardWriteCommit:
         task_id = uuid.uuid4().hex[:12]
+        staging = os.path.join(self.path, "_staging")
         handles, files = {}, []
         try:
             for row in iterator:
-                stream = row[STREAM_COL] if self.has_stream_col else self.path
                 key = str(row[KEY_COL])
                 # crc32: deterministic cross-process (Python's hash() is
                 # salted), the MD5-of-partition-key role in Kinesis.
                 shard = zlib.crc32(key.encode("utf-8")) % self.num_shards
-                if (stream, shard) not in handles:
-                    staging = os.path.join(stream, "_staging")
+                if shard not in handles:
                     os.makedirs(staging, exist_ok=True)
-                    rel = os.path.join(
-                        f"shard-{shard:05d}", f"part-{task_id}.jsonl"
-                    )
                     tmp = os.path.join(staging, f"{shard:05d}-{task_id}.jsonl")
-                    handles[stream, shard] = open(tmp, "w", encoding="utf-8")
-                    files.append((stream, rel, tmp))
+                    handles[shard] = open(tmp, "w", encoding="utf-8")
+                    files.append((shard, tmp))
                 env = {"partitionKey": key, "data": row[DATA_COL]}
-                handles[stream, shard].write(json.dumps(env) + "\n")
+                handles[shard].write(json.dumps(env) + "\n")
         finally:
             for fh in handles.values():
                 fh.close()
         return ShardWriteCommit(files=files)
 
     def commit(self, messages) -> None:
-        by_stream: dict[str, list] = {}
-        for msg in messages:
-            if msg is None:
-                continue
-            for stream, rel, tmp in msg.files:
-                by_stream.setdefault(stream, []).append((rel, tmp))
-        # The `path` stream commits first, so the drill points armed in it
-        # fire before any other stream of the job is published.
-        for stream in sorted(by_stream, key=lambda s: (s != self.path, s)):
-            self._commit_stream(stream, by_stream[stream])
-
-    def _commit_stream(self, stream: str, files: list) -> None:
-        # Crash-injection failpoint for the exactly-once tests: a file
-        # named _failpoint_before_commit in the stream dir makes this
-        # commit die AFTER task files landed in staging but BEFORE any
-        # of the stream's files is published — the torn-write moment.
-        # Single-shot (the file is consumed) and file-based because
-        # commit runs in a separate Python worker process where a test's
-        # monkeypatch/env can't reach. No-op in normal operation.
-        failpoint = os.path.join(stream, "_failpoint_before_commit")
-        if os.path.exists(failpoint):
-            os.remove(failpoint)
-            raise RuntimeError(
-                "kinesis_sim failpoint: injected crash before commit"
-            )
-        # kill -9 drill points: staged, nothing published yet / torn
-        # mid-publish / this stream done, the next not started. See
-        # _consume_killpoint.
-        _consume_killpoint(stream, "_killpoint_before_publish")
-        kill_mid_publish = os.path.exists(
-            os.path.join(stream, "_killpoint_mid_publish")
-        )
-        token = self.commit_token
-        done_marker = (
-            os.path.join(stream, "_epochs", f"w-{token}") if token else None
-        )
-        if done_marker and os.path.exists(done_marker):
-            # This exact (checkpoint-scope, epoch) already published to
-            # this stream in a previous attempt that died before the
-            # epoch committed: drop the retry's staged files, publish
-            # nothing — the stream already holds exactly one copy.
-            _remove_staged(tmp for _rel, tmp in files)
-            return
-        if token:
-            # Roll back a TORN previous attempt of this same token: any
-            # published file carrying the token sits at its shard's tail
-            # (it was appended by the dead attempt and the epoch never
-            # committed), so deleting it restores the pre-epoch state and
-            # the republish below lands at the same sequence numbers.
-            for d in _shard_dirs(stream):
-                for f in _shard_files(d):
-                    if f"-{token}-" in os.path.basename(f):
-                        os.remove(f)
-        # Sequence numbers are defined by FILE-NAME order within a shard
-        # (_iter_shard_records), so appended files MUST sort after every
-        # existing file or a later append would renumber records a
-        # checkpointed reader already consumed (caught as a real
-        # duplicate+skip in the round-4 etl incremental-resume test: a
-        # lower-sorting uuid part file shifted the committed offsets).
-        # Each new file therefore gets a zero-padded per-shard index =
-        # count of existing files + arrival order; the task-id suffix
-        # keeps concurrent committers collision-free, and zero-padded
-        # indices always sort after lower ones regardless of suffix.
-        # Legacy migration: streams written BEFORE the zero-padded-index
-        # fix hold uuid-named parts (part-<taskid>.jsonl) that new
-        # indexed names can sort BEFORE (e.g. part-00000002-x <
-        # part-3fa9...), renumbering offsets a checkpointed reader has
-        # already consumed — the same duplicate/skip bug the index fix
-        # closed, alive on legacy data. Before appending, rename every
-        # existing file to its canonical index in the CURRENT sorted
-        # order (the order consumers have been reading), which preserves
-        # all record positions and guarantees appends sort after.
-        next_idx: dict[str, int] = {}
-        for rel, tmp in files:
-            shard_rel = os.path.dirname(rel)
-            shard_dir = os.path.join(stream, shard_rel)
-            os.makedirs(shard_dir, exist_ok=True)
-            if shard_rel not in next_idx:
-                existing = _shard_files(shard_dir)
-                if any(not _INDEXED_RE.match(os.path.basename(f)) for f in existing):
-                    for i, f in enumerate(existing):
-                        tail = os.path.basename(f)[len("part-"):]
-                        canon = os.path.join(shard_dir, f"part-{i:08d}-{tail}")
-                        if f != canon:
-                            os.replace(f, canon)
-                    existing = _shard_files(shard_dir)
-                next_idx[shard_rel] = len(existing)
-            idx = next_idx[shard_rel]
-            next_idx[shard_rel] = idx + 1
-            suffix = os.path.basename(rel)[len("part-"):]
-            if token:
-                suffix = f"{token}-{suffix}"
-            fname = f"part-{idx:08d}-{suffix}"
-            os.replace(tmp, os.path.join(shard_dir, fname))
-            if kill_mid_publish:
-                # consume + SIGKILL after the FIRST publish: a
-                # genuinely torn multi-file publish for the drill.
-                _consume_killpoint(stream, "_killpoint_mid_publish")
-        if done_marker:
-            os.makedirs(os.path.dirname(done_marker), exist_ok=True)
-            with open(done_marker, "w", encoding="utf-8") as fh:
-                fh.write("ok")
-        staging = os.path.join(stream, "_staging")
-        if os.path.isdir(staging) and not os.listdir(staging):
-            os.rmdir(staging)
-        _consume_killpoint(stream, "_killpoint_between_routes")
+        files = [f for msg in messages if msg is not None for f in msg.files]
+        publish_stream(self.path, files, self.commit_token)
+        _drop_empty_staging(self.path)
 
     def abort(self, messages) -> None:
         _remove_staged(
-            tmp for msg in messages if msg is not None for *_, tmp in msg.files
+            tmp for msg in messages if msg is not None for _shard, tmp in msg.files
         )
+
+
+def write_streams(frame, streams: list[str], token: str) -> None:
+    """Write every row of `frame` to the stream `streams[s]` in ONE Spark
+    job, then publish each stream from this (driver) process.
+
+    `frame` carries `s` (an index into `streams`), `partition_key` and
+    `data`. Rows get the shard and envelope `KinesisSimWriter.write`
+    gives them (crc32 of the UTF-8 key mod NUM_SHARDS; a NULL key is
+    the string "None"), computed as JVM expressions and staged by
+    Spark's built-in text writer under `<streams[0]>/_staging/<token>`.
+    The stage is overwritten on every call, so a replayed epoch never
+    publishes files of an earlier attempt. Each stream then goes
+    through `publish_stream` with `token`, streams[0] first, and the
+    stage is deleted."""
+    from pyspark.sql import functions as F
+
+    key = F.coalesce(F.col(KEY_COL).cast("string"), F.lit("None"))
+    stage = os.path.join(streams[0], "_staging", token)
+    (
+        frame.select(
+            "s",
+            F.pmod(F.crc32(key.cast("binary")), F.lit(NUM_SHARDS)).alias("shard"),
+            F.to_json(
+                F.struct(key.alias("partitionKey"), F.col(DATA_COL).alias("data"))
+            ).alias("value"),
+        )
+        .write.mode("overwrite")
+        # static: overwrite clears the whole stage, not only the
+        # partitions this attempt writes
+        .option("partitionOverwriteMode", "static")
+        .partitionBy("s", "shard")
+        .text(stage)
+    )
+    for i, stream in enumerate(streams):
+        staged = os.path.join(stage, f"s={i}")
+        shard_dirs = sorted(os.listdir(staged)) if os.path.isdir(staged) else []
+        publish_stream(
+            stream,
+            [
+                (int(d[len("shard="):]), os.path.join(staged, d, f))
+                for d in shard_dirs
+                for f in sorted(os.listdir(os.path.join(staged, d)))
+                if f.startswith("part-")
+            ],
+            token,
+        )
+    shutil.rmtree(stage)
+    _drop_empty_staging(streams[0])
 
 
 class KinesisSimDataSource(DataSource):
@@ -474,11 +533,10 @@ class KinesisSimDataSource(DataSource):
                                (consumer.py:115's Limit=200)       [stream read]
       numShards                shard count on write, default 4
       commitToken              epoch identity on write; makes a retried
-                               write publish each stream exactly once
+                               write publish exactly once
 
     A written frame carries `partition_key` (shard routing) and `data`
-    (payload) columns, plus an optional `stream` column naming each
-    row's destination stream directory; rows go to `path` without it.
+    (payload) columns; every row goes to the `path` stream.
     """
 
     @classmethod
@@ -512,9 +570,8 @@ class KinesisSimDataSource(DataSource):
                     os.remove(f)
         return KinesisSimWriter(
             path,
-            int(self.options.get("numShards", "4")),
+            int(self.options.get("numShards", NUM_SHARDS)),
             self.options.get("committoken") or self.options.get("commitToken"),
-            STREAM_COL in schema.fieldNames(),
         )
 
 

@@ -16,12 +16,13 @@ pipeline as ONE logical plan, incrementalized by the micro-batch engine:
   results oracle-checkable by batch replay.
 - sink: `kinesis_sim_sink`, a `foreachBatch` demux that tags every row
   with its destination stream — USA, International, or the
-  `_quarantine` stream beside them for malformed records — and writes
-  all of them in ONE kinesis_sim write job per epoch (the reference's
-  per-record put_record(StreamName=...), consumer.py:160-171).
+  `_quarantine` stream beside them for malformed records. Each epoch is
+  staged by Spark's text writer in ONE job and published by the driver
+  (the reference's per-record put_record(StreamName=...),
+  consumer.py:160-171).
 - exactly-once: the checkpoint's offset WAL replays an unfinished epoch,
-  and the writer's commitToken `<checkpoint-scope>e<epoch>` makes the
-  replay publish each stream exactly once — replacing the reference's
+  and the publish token `<checkpoint-scope>e<epoch>` makes the replay
+  publish each stream exactly once — replacing the reference's
   restart-equals-replay behavior (consumer.py:76).
 
 Shard -> partition mapping: each source shard is read by its own task;
@@ -201,15 +202,16 @@ def kinesis_sim_sink(dest_streams: dict[str, str], run_scope: str = "default"):
     """foreachBatch body: the reference's demux (consumer.py:160-185:
     put_record(StreamName=dest_streams[route], PartitionKey=session_id),
     route 'USA' when country == 'USA' and 'International' otherwise,
-    malformed records logged and dropped) as ONE kinesis_sim write job
-    per epoch. Every row carries its destination stream; a malformed
-    record goes to `quarantine_stream(dest_streams)` with its raw text
-    as both partition key and payload, instead of being dropped.
-    `dest_streams` maps 'USA'/'International' to stream directories;
-    every destination has the writer's default 4 shards.
+    malformed records logged and dropped), staged by Spark's text writer
+    in ONE job per epoch and published by the driver
+    (`kinesis_sim.write_streams`). Every row carries its destination
+    stream; a malformed record goes to `quarantine_stream(dest_streams)`
+    with its raw text as both partition key and payload, instead of
+    being dropped. `dest_streams` maps 'USA'/'International' to stream
+    directories; every destination has 4 shards.
 
-    Epoch retries are idempotent through the writer's commitToken
-    `<run_scope>e<epoch>`: for each stream, commit() publishes nothing
+    Epoch retries are idempotent through the publish token
+    `<run_scope>e<epoch>`: for each stream, the publish does nothing
     once the stream's done-marker exists, and otherwise rolls back a
     torn publish of the same token before republishing. The token is
     scoped to the CHECKPOINT identity (run_scope) because epoch ids
@@ -217,16 +219,15 @@ def kinesis_sim_sink(dest_streams: dict[str, str], run_scope: str = "default"):
     earlier run into the same dest would silently skip the new run's
     first epoch. The kill -9 drills in tests/test_cli.py crash the
     driver at every step of this protocol."""
-    usa, intl = dest_streams["USA"], dest_streams["International"]
-    quarantine = quarantine_stream(dest_streams)
+    usa = dest_streams["USA"]
+    streams = [usa, dest_streams["International"], quarantine_stream(dest_streams)]
 
     def write_batch(batch: DataFrame, epoch_id: int) -> None:
-        from ..sources.kinesis_sim import _consume_killpoint, register_format
+        from ..sources.kinesis_sim import _consume_killpoint, write_streams
 
-        register_format(batch.sparkSession)
         # kill -9 drill points: torn WAL with nothing / every stream
-        # published. The writer's commit() holds the points in between.
-        # Armed by files in the USA stream dir; no-ops in normal operation.
+        # published. publish_stream holds the points in between. Armed
+        # by files in the USA stream dir; no-ops in normal operation.
         _consume_killpoint(usa, "_killpoint_batch_start")
         bad = F.col(CORRUPT_COL).isNotNull()
         enriched = enrich_sessions(batch)
@@ -238,22 +239,19 @@ def kinesis_sim_sink(dest_streams: dict[str, str], run_scope: str = "default"):
         payload = F.to_json(
             F.struct(*[c for c in enriched.columns if c != CORRUPT_COL])
         )
-        (
+        write_streams(
             enriched.select(
-                F.when(bad, F.lit(quarantine))
-                .when(F.col("country") == "USA", F.lit(usa))
-                .otherwise(F.lit(intl))
-                .alias("stream"),
+                F.when(bad, F.lit(2))
+                .when(F.col("country") == "USA", F.lit(0))
+                .otherwise(F.lit(1))
+                .alias("s"),
                 F.when(bad, F.col(CORRUPT_COL))
                 .otherwise(F.col("session_id"))
                 .alias("partition_key"),
                 F.when(bad, F.col(CORRUPT_COL)).otherwise(payload).alias("data"),
-            )
-            .write.format("kinesis_sim")
-            .option("path", usa)
-            .option("commitToken", f"{run_scope}e{epoch_id:020d}")
-            .mode("append")
-            .save()
+            ),
+            streams,
+            f"{run_scope}e{epoch_id:020d}",
         )
         _consume_killpoint(usa, "_killpoint_after_routes")
 

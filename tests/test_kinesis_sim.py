@@ -8,6 +8,7 @@ starting positions (consumer.py:76,115), and two-phase write commit.
 
 from __future__ import annotations
 
+import json
 import os
 import time
 import zlib
@@ -468,3 +469,94 @@ def test_commit_token_makes_appends_idempotent(spark, tmp_path):
     # (c) a new token appends
     write("scopeAe2")
     assert n_records() == 20
+
+
+def test_text_stager_matches_datasource_format(spark, tmp_path):
+    """The sink's stager (Spark's text writer, JVM routing and envelope)
+    and the DataSource writer put every record on the same shard with
+    the same decoded (partitionKey, data), for text JSON must escape, a
+    malformed record's raw text, and a NULL key (str(None) == "None")."""
+    kinesis_sim.register_format(spark)
+    malformed = '{"session_id": "s-bad", '
+    rows = [
+        ("s-1", '{"city": "Zürich 東京"}'),
+        ("ключ-ü", 'quote " backslash \\ newline \n tab \t end'),
+        (malformed, malformed),
+        (None, '{"session_id": null}'),
+        ("s-null-data", None),
+    ] + [(f"k{i}", f"v{i}") for i in range(40)]
+    df = spark.createDataFrame(rows, "partition_key string, data string")
+    via_source, via_stager = str(tmp_path / "source"), str(tmp_path / "stager")
+    df.write.format("kinesis_sim").option("path", via_source).mode("append").save()
+    kinesis_sim.write_streams(
+        df.select(F.lit(0).alias("s"), "partition_key", "data"), [via_stager], "tok"
+    )
+
+    def records(path):
+        back = spark.read.format("kinesis_sim").option("path", path).load()
+        return sorted(
+            (r.shard_id, r.partition_key, r.data) for r in back.collect()
+        )
+
+    got = records(via_stager)
+    assert got == records(via_source)
+    assert len(got) == len(rows)
+    assert {k for _s, k, _d in got} >= {"None", malformed, "ключ-ü"}
+    assert len({s for s, _k, _d in got}) == 4
+
+
+def test_stream_reader_reads_only_new_files_and_offsets_stay_dense(tmp_path, monkeypatch):
+    """latestOffset counts each published file once, however many
+    triggers see it, and a shard that gains files between triggers
+    still yields every sequence number exactly once."""
+    path = str(tmp_path / "stream")
+    added = 0
+
+    def add_file(shard, n):
+        nonlocal added
+        d = os.path.join(path, f"shard-{shard:05d}")
+        os.makedirs(d, exist_ok=True)
+        idx = len(os.listdir(d))
+        with open(os.path.join(d, f"part-{idx:08d}-t.jsonl"), "w", encoding="utf-8") as fh:
+            for i in range(n):
+                fh.write(json.dumps({"partitionKey": f"k{shard}-{idx}-{i}", "data": "x"}) + "\n")
+        added += 1
+
+    counted = []
+    file_length = kinesis_sim._file_length
+    monkeypatch.setattr(
+        kinesis_sim, "_file_length", lambda f: counted.append(f) or file_length(f)
+    )
+    add_file(0, 3)
+    add_file(1, 2)
+    reader = kinesis_sim.KinesisSimStreamReader(path, "TRIM_HORIZON", 2)
+    start, seqs, triggers = reader.initialOffset(), {}, 0
+    while True:
+        end = reader.latestOffset()
+        triggers += 1
+        if end == start:
+            break
+        for part in reader.partitions(start, end):
+            for batch in reader.read(part):
+                cols = batch.to_pydict()
+                for sid, seq in zip(cols["shard_id"], cols["sequence_number"]):
+                    seqs.setdefault(sid, []).append(seq)
+        start = end
+        if triggers <= 2:
+            add_file(0, 2)  # shard 0 grows while it is being drained
+    assert seqs == {"shard-00000": list(range(7)), "shard-00001": [0, 1]}
+    # latestOffset counted every file once; the 2 more are the stale-
+    # checkpoint guard's own full count on the first partitions() call.
+    assert len(set(counted)) == added
+    assert len(counted) == added + 2
+
+
+def test_slice_read_decodes_only_its_records(tmp_path):
+    d = tmp_path / "shard-00000"
+    d.mkdir()
+    (d / "part-00000000-t.jsonl").write_text(
+        "not json: counted, never decoded\n"
+        + "".join(json.dumps({"partitionKey": f"k{i}", "data": "x"}) + "\n" for i in (1, 2))
+    )
+    got = list(kinesis_sim._iter_shard_records(str(d), 1, 2))
+    assert got == [(1, {"partitionKey": "k1", "data": "x"})]

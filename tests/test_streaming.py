@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 
 import pytest
 
@@ -169,6 +170,63 @@ def test_sink_replayed_epoch_publishes_each_stream_once(spark, tmp_path, session
         s["session_id"] for s in SESSIONS if s["country"] != "USA"
     )
     assert ids(quarantine_stream(dests)) == ["{definitely not json"]
+
+
+def _static_batch(spark, session_dir):
+    return (
+        spark.read.schema(SESSION_SCHEMA_WITH_CORRUPT)
+        .options(**PERMISSIVE)
+        .json(session_dir)
+    )
+
+
+def test_sink_epochs_publish_without_registering_the_format(
+    spark, tmp_path, session_dir, monkeypatch
+):
+    """Two clean epochs of the sink: neither registers the kinesis_sim
+    data source, every published file keeps the name readers parse, and
+    no stage is left behind."""
+    from stream_ingestion_amazon_kinesis_spark.sources import kinesis_sim
+
+    def refuse(_spark):
+        raise AssertionError("the sink registered the data source")
+
+    monkeypatch.setattr(kinesis_sim, "register_format", refuse)
+    dests = _dests(tmp_path)
+    streams = (*dests.values(), quarantine_stream(dests))
+    write_batch = kinesis_sim_sink(dests, run_scope="epochs")
+    batch = _static_batch(spark, session_dir)
+    write_batch(batch, 0)
+    write_batch(batch, 1)
+
+    assert [_read_stream(spark, p).count() for p in streams] == [20, 40, 2]
+    name = re.compile(r"^part-\d{8}-epochse\d{20}-[0-9a-f]{12}\.jsonl$")
+    for stream in streams:
+        assert not os.path.exists(os.path.join(stream, "_staging")), stream
+        shards = [d for d in os.listdir(stream) if d.startswith("shard-")]
+        assert shards, stream
+        for d in shards:
+            for f in os.listdir(os.path.join(stream, d)):
+                assert name.match(f), f
+
+
+def test_sink_replay_never_publishes_a_stale_stage(spark, tmp_path, session_dir):
+    """A replayed epoch rewrites the stage an earlier attempt left, even
+    where it writes no files itself and under dynamic partition
+    overwrite: nothing of the earlier attempt is published."""
+    dests = _dests(tmp_path)
+    stale = os.path.join(dests["USA"], "_staging", f"stalee{7:020d}", "s=0", "shard=7")
+    os.makedirs(stale)
+    with open(os.path.join(stale, "part-00000-stale.txt"), "w", encoding="utf-8") as fh:
+        fh.write(json.dumps({"partitionKey": "stale", "data": "{}"}) + "\n")
+    conf = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(conf, "dynamic")
+    try:
+        kinesis_sim_sink(dests, run_scope="stale")(_static_batch(spark, session_dir), 7)
+    finally:
+        spark.conf.unset(conf)
+    got = sorted(r["partition_key"] for r in _read_stream(spark, dests["USA"]).collect())
+    assert got == sorted(s["session_id"] for s in SESSIONS if s["country"] == "USA")
 
 
 def _events_json_dir(spark, sf_dir, tmp_path, with_dupes=False):
